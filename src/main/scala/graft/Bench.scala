@@ -504,7 +504,10 @@ object Bench {
     * overflows [[TinyLineBudget]] bytes, rows below an adaptive
     * threshold (0.25/0.5/1/2/4 s) are elided and their sum reported as
     * `queries_rest_total`. Failed rows (-1) are never elided into the
-    * rest-total — they stay visible in `failed`. Falls back to the
+    * rest-total — they stay visible in `failed`. `restandalone` is
+    * rounded the same way; if no rung fits with it, the ladder runs
+    * again without it (its row count kept as `restandalone_elided`),
+    * so the summary fields are never what overflows. Falls back to the
     * full line if reshaping fails.
     */
   private[graft] val TinyLineBudget = 1800
@@ -531,7 +534,7 @@ object Bench {
             }
             (out, rest, elided)
         }
-      def build(minSec: Double): String = {
+      def build(minSec: Double, withRestand: Boolean): String = {
         val out = om.createObjectNode()
         out.set("full_artifact", om.getNodeFactory.textNode("BENCH_LOCAL.json"))
         Seq("metric", "value", "unit", "value_cold", "failed", "sf",
@@ -547,8 +550,11 @@ object Bench {
           }
         }
         compactMap("restandalone", 0.0).foreach { case (m, _, _) =>
-          if (m.size() > 0)
-            out.set[com.fasterxml.jackson.databind.JsonNode]("restandalone", m)
+          if (m.size() > 0) {
+            if (withRestand)
+              out.set[com.fasterxml.jackson.databind.JsonNode]("restandalone", m)
+            else out.put("restandalone_elided", m.size())
+          }
         }
         om.writeValueAsString(out)
       }
@@ -559,9 +565,10 @@ object Bench {
       // ~84 rows) overflowed — quarter-steps in the 0-2s band keep the
       // emitted map as large as the clip allows. The last rung (2048s)
       // cannot realistically hold >40 rows of real data.
-      ((0 to 8).map(_ * 0.25) ++ Seq(2.5, 3.0, 3.5) ++
-        Seq.iterate(4.0, 10)(_ * 2)).view.map(build)
+      val rungs = (0 to 8).map(_ * 0.25) ++ Seq(2.5, 3.0, 3.5) ++
+        Seq.iterate(4.0, 10)(_ * 2)
+      Seq(true, false).view.flatMap(r => rungs.view.map(build(_, r)))
         .find(_.length <= TinyLineBudget)
-        .getOrElse(build(2048.0)) // best effort: emit the top rows anyway
+        .getOrElse(build(2048.0, withRestand = false)) // best effort: emit the top rows anyway
     } catch { case _: Throwable => line }
 }

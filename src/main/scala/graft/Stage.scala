@@ -21,16 +21,13 @@ import org.apache.spark.sql.DataFrame
   * signatures).
   */
 object Stage {
-  /** r17: the fence is built at the InternalRow level
-    * ([[org.apache.spark.sql.GraftPlanFence]]) — the old
-    * `createDataFrame(df.rdd, df.schema)` form paid an interpreted
-    * UnsafeRow→Row→InternalRow double conversion per row PER CONSUMING
-    * STAGE for the same LogicalRDD plan fence. Semantics unchanged:
-    * same `Scan ExistingRDD` leaf, same recompute-per-consumer
-    * behavior, same optimizer opacity.
+  /** The fence is built at the InternalRow level
+    * ([[org.apache.spark.sql.graftx.PlanBridge.barrier]]): a
+    * `Scan ExistingRDD` leaf, recomputed per consumer, opaque to the
+    * optimizer, with no per-row Row conversion.
     */
   def barrier(df: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftPlanFence.internalRowBarrier(df)
+    org.apache.spark.sql.graftx.PlanBridge.barrier(df)
 
   /** Barrier + MATERIALIZE-ONCE: `barrier` pins expressions but its RDD
     * is still recomputed by every consuming stage — a subtree shared by
@@ -77,38 +74,43 @@ object Stage {
       dir: java.io.File): Unit =
     spark.catalog.refreshByPath(dir.getAbsolutePath)
 
+  /** The name fingerprint of every build-once /tmp artifact: the first
+    * 8 bytes of md5(s) as lowercase hex. Truncated MD5, not
+    * String.hashCode: 32-bit fingerprints collide plausibly across
+    * revisions, and a collision would re-attach a stale artifact.
+    */
+  def fp(s: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
+
+  /** A source file or directory's state: `name:size:mtime` per child,
+    * sorted by name and joined by `|`, for a directory; `size:mtime`
+    * for a plain file. `_`-prefixed files (parquet `_SUCCESS` markers)
+    * are INCLUDED: a marker's mtime changing only ever forces a
+    * spurious rebuild, never a stale read. (Layout.sourceEntries keeps
+    * its own filtered form because its entries double as the
+    * incremental-build diff record, where a marker must not read as
+    * new data.)
+    */
+  def fileStats(f: java.io.File): String =
+    if (f.isDirectory)
+      Option(f.listFiles()).map(_.sortBy(_.getName)
+        .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
+        .getOrElse("")
+    else s"${f.length}:${f.lastModified}"
+
+  /** [[fp]] of a source table's path and [[fileStats]] — the shared key
+    * ingredient for every build-once /tmp artifact derived from driver
+    * testdata: include it in the artifact dir/table name so a
+    * REGENERATED source can never be served by a stale materialization.
+    */
+  def sourceFingerprint(d: String, table: String): String =
+    fp(s"$d/$table;${fileStats(new java.io.File(s"$d/$table.parquet"))}")
+
   /** Recursive delete for fixture/layout directories (the one shared
     * copy — null-guarded: listFiles() returns null on IO error or
     * non-directories racing deletion).
     */
-  /** md5-8 fingerprint of a source table's file stats (name:size:mtime
-    * per file) — the shared key ingredient for every build-once /tmp
-    * artifact derived from driver testdata: include it in the artifact
-    * dir/table name so a REGENERATED source can never be served by a
-    * stale materialization (the staleness class the z-layout and dedup
-    * artifacts already guard against).
-    *
-    * `_`-prefixed files (parquet `_SUCCESS` markers) are INCLUDED here
-    * deliberately — this is the ONE fingerprint implementation (the
-    * stream fixtures route through it; Layout.sourceEntries is the
-    * exception because its entries double as the incremental-build
-    * diff record, where a marker file must not read as "new data").
-    * A marker's mtime changing only ever forces a spurious rebuild,
-    * never a stale read.
-    */
-  def sourceFingerprint(d: String, table: String): String = {
-    val src = new java.io.File(s"$d/$table.parquet")
-    val stats =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
-          .getOrElse("")
-      else s"${src.length}:${src.lastModified}"
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(s"$d/$table;$stats".getBytes("UTF-8"))
-      .take(8).map(b => f"$b%02x").mkString
-  }
-
   def deleteRecursively(f: java.io.File): Unit = {
     if (f.isDirectory) {
       val children = f.listFiles()

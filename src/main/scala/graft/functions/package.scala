@@ -230,15 +230,6 @@ package object functions {
   def topk_rows(scoreId: Column, k: Int): Column =
     toCol(TopKRows(toExpr(scoreId), k).toAggregateExpression())
 
-  /** max_by with an ObjectHashAggregate plan: identical semantics
-    * (strict-greater replacement, null orders skipped). NOT the
-    * default latest-per-key path — measured slower than max_by at
-    * realistic key cardinalities (the 128-key sort fallback); see
-    * [[LatestRow]] for when it is the right shape.
-    */
-  def latest_row(payload: Column, ord: Column): Column =
-    toCol(LatestRow(toExpr(payload), toExpr(ord)).toAggregateExpression())
-
   /** EXACT distinct count via mergeable container bitmaps (the
     * Doris/ClickHouse BITMAP shape): fixed-size word-OR partials per
     * (group, mapper) instead of count-distinct's one-shuffled-row per

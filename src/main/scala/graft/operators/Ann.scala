@@ -623,22 +623,13 @@ object Ann {
   private val TrainSemantics = s"lloyd:$LloydIters:$Dim:$FxScale:$TrainSample"
 
   private[graft] def centroidsFile(d: String, tag: String, cells: Int): java.io.File = {
-    def fp(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    }
+    import graft.Stage.{fileStats, fp}
     // the fingerprint covers the SOURCE DATA's (size, mtime) besides
     // path/tag/cells/semantics: a corpus regenerated at the same path
     // must re-train, not re-attach codebooks trained on the old bytes
     // (the tag also versions the corpus CONSTRUCTION — ivf/semdedup
     // build different corpora from the same file)
-    def stats(x: java.io.File): String =
-      if (x.isDirectory)
-        Option(x.listFiles()).map(_.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
-          .getOrElse("")
-      else s"${x.length}:${x.lastModified}"
-    val src = stats(new java.io.File(s"$d/embeddings.parquet"))
+    val src = fileStats(new java.io.File(s"$d/embeddings.parquet"))
     new java.io.File(
       s"/tmp/graft_quantizer_${fp(d)}_${tag}_${cells}_${fp(s"$TrainSemantics;$src")}")
   }

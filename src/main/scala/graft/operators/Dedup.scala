@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Stage.{fileStats, fp}
 import graft.Tables
 import graft.queries.QueryDef
 
@@ -803,20 +804,10 @@ object Dedup {
     * label table.
     */
   private[graft] def componentsDir(d: String): java.io.File = {
-    def fp(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    }
     // like the quantizer artifact, the fingerprint also covers the
     // SOURCE DATA's (size, mtime): a corpus regenerated at the same
     // path must re-cluster, not re-attach labels from the old bytes
-    val src = new java.io.File(s"$d/documents.parquet")
-    val stats =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
-          .getOrElse("")
-      else s"${src.length}:${src.lastModified}"
+    val stats = fileStats(new java.io.File(s"$d/documents.parquet"))
     new java.io.File(s"/tmp/graft_components_${fp(d)}_${fp(s"$dClusterSql;$stats")}")
   }
 
@@ -897,17 +888,7 @@ object Dedup {
     * regenerated corpus rebuild instead of re-attaching stale pairs.
     */
   private[graft] def edgesDir(d: String): java.io.File = {
-    def fp(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    }
-    val src = new java.io.File(s"$d/documents.parquet")
-    val stats =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
-          .getOrElse("")
-      else s"${src.length}:${src.lastModified}"
+    val stats = fileStats(new java.io.File(s"$d/documents.parquet"))
     new java.io.File(s"/tmp/graft_edges_${fp(d)}_${fp(s"edges-v1;$dClusterSql;$stats")}")
   }
 
@@ -1507,17 +1488,7 @@ object Dedup {
     "v1;content_hash=md5(utf8);simhash=simhash64(word_shingle_md5_hashes(text,1));tokenless=null"
 
   private[graft] def dedupIndexDir(d: String): java.io.File = {
-    def fp(x: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(x.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    }
-    val src = new java.io.File(s"$d/documents.parquet")
-    val stats =
-      if (src.isDirectory)
-        Option(src.listFiles()).map(_.sortBy(_.getName)
-          .map(c => s"${c.getName}:${c.length}:${c.lastModified}").mkString("|"))
-          .getOrElse("")
-      else s"${src.length}:${src.lastModified}"
+    val stats = fileStats(new java.io.File(s"$d/documents.parquet"))
     new java.io.File(s"/tmp/graft_dedupindex_${fp(d)}_${fp(s"$DedupIndexSemantics;$stats")}")
   }
 

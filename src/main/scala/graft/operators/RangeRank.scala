@@ -43,12 +43,6 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 object RangeRank {
 
-  /** Max single-bucket row count of the LAST withRowNumber call's
-    * exact phase-3 grid (driver-side observability for scale probes;
-    * not part of any query's semantics).
-    */
-  @volatile private[graft] var lastMaxBucketRows: Long = -1L
-
   /** Append `out` = exact global row_number over
     * (key asc|desc, tiebreak... asc) within each `group`, and
     * `nOut` = the group's total row count (for ntile arithmetic).
@@ -71,7 +65,8 @@ object RangeRank {
     * which is exactly what q_mwu's bucket-local min-rank/ties forbids
     * (it stays on the monotone-in-key path). Requires non-null
     * tiebreak columns; rank output is bit-identical either way
-    * (bucketing only repartitions the work).
+    * (bucketing only repartitions the work). RANK_PROBE.json records
+    * the heavy-tie sort distributing across buckets.
     */
   def withRowNumber(
       input: DataFrame,
@@ -171,11 +166,6 @@ object RangeRank {
     // the driver (bounded: |groups|·buckets rows).
     val grid = bkt.groupBy((group :+ "_rrk_bkt").map(col): _*)
       .agg(count(lit(1L)).as("_rrk_cnt")).collect()
-    // probe observability: the grid is already on the driver; its max
-    // is the fattest per-bucket sort this call will run (RankTieProbe
-    // reads it to SHOW the heavy-tie sort distributing)
-    lastMaxBucketRows =
-      if (grid.isEmpty) 0L else grid.map(_.getAs[Long]("_rrk_cnt")).max
     val offRows = grid.groupBy(r => group.map(r.getAs[Any]))
       .iterator.flatMap { case (gv, rows) =>
         val inOrder = rows.sortBy(_.getAs[Int]("_rrk_bkt"))

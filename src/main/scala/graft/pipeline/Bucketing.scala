@@ -63,13 +63,7 @@ object Bucketing {
     */
   private def layoutName(prefix: String, d: String, df: DataFrame,
       key: String, buckets: Int, srcTable: String): String = {
-    // truncated MD5, not String.hashCode: 32-bit fingerprints collide
-    // plausibly across layout revisions (and abs(Int.MinValue) stays
-    // negative), and a collision would re-attach a stale layout
-    def fp(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-    }
+    import graft.Stage.fp
     s"${prefix}_${fp(d)}_${fp(df.schema.toDDL + "|" + key + "|" + buckets)}_" +
       graft.Stage.sourceFingerprint(d, srcTable)
   }

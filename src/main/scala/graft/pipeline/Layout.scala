@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Stage.fp
 import graft.Tables
 import graft.queries.QueryDef
 import graft.queries.QueryDef.moneySum
@@ -93,11 +94,6 @@ object Layout {
 
   private val LayoutSemantics =
     s"zorder-v2;dims=user_id,us;bits=$Bits;bucketShift=$BucketShift;cols=event_id,user_id,us,event_type,value,zval"
-
-  private def fp(x: String): String = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    md.digest(x.getBytes("UTF-8")).take(8).map(b => f"$b%02x").mkString
-  }
 
   /** Source state as one line per file — the fingerprint input AND the
     * record an incremental build diffs against.

@@ -74,21 +74,20 @@ object MetricsSink {
 }
 
 /** The shared one-line-per-metric JSON encoding both sinks emit. */
-private[pipeline] object MetricLine {
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
+private[graft] object MetricLine {
+  /** `s` as a quoted JSON string literal (quote, backslash and every
+    * control character escaped).
+    */
+  def quote(s: String): String =
+    "\"" + String.valueOf(
+      com.fasterxml.jackson.core.io.JsonStringEncoder.getInstance().quoteAsString(s)) + "\""
 
   def apply(kind: String, name: String, value: String,
       tags: Map[String, String]): String = {
     val tagJson = tags.toSeq.sortBy(_._1)
-      .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }
+      .map { case (k, v) => s"${quote(k)}:${quote(v)}" }
       .mkString("{", ",", "}")
-    s"""{"ts":${System.currentTimeMillis()},"kind":"$kind","name":"${esc(name)}","value":$value,"tags":$tagJson}"""
+    s"""{"ts":${System.currentTimeMillis()},"kind":"$kind","name":${quote(name)},"value":$value,"tags":$tagJson}"""
   }
 }
 

@@ -24,9 +24,9 @@ object Snapshot {
     * Highest `order` wins; ties broken by the struct's later fields.
     *
     * r17 NOTE — max_by is KEPT, with a two-scale measurement behind it:
-    * the ObjectHashAggregate alternative
-    * ([[graft.functions.latest_row]], implemented + spec'd this round)
-    * A/B-measured SLOWER standalone (sf10 p_latest_by_key 0.99→2.27 s,
+    * an ObjectHashAggregate alternative (a TypedImperativeAggregate
+    * `latest_row`, since deleted; plans/r17/latest_row_ab.md) A/B-measured
+    * SLOWER standalone (sf10 p_latest_by_key 0.99→2.27 s,
     * p_cdc_apply 1.64→2.48 s): ObjectHashAggregateExec falls back to
     * sort-based aggregation once a partition's hash map passes
     * spark.sql.objectHashAggregate.sortBased.fallbackThreshold

@@ -118,7 +118,7 @@ object Stats {
     * tieSplit=true — this consumer needs only row_number, so buckets
     * split on COMPOSITE (cents, custkey) boundaries and a degenerate
     * spend distribution (half the entities on one flat value) can
-    * never re-create a single fat-bucket sort (RankTieProbe measures
+    * never re-create a single fat-bucket sort (RANK_PROBE.json records
     * it distributing). The per-decile
     * rollup and its cumulative sums collapse into ONE global aggregate
     * (30 conditional BIGINT sums) unpacked by `stack` — zero windows

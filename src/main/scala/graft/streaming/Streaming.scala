@@ -1780,11 +1780,11 @@ object Streaming {
   /** latest-per-key over the merged (state ∪ batch) frame — the single
     * merge plan upsertBatch runs per microbatch, exposed for the
     * plan-shape spec: must show partial aggregation (partial max_by
-    * map-side before the exchange) and NO Window anywhere. r17: the
-    * ObjectHashAggregate alternative (graft.functions.latest_row) was
-    * implemented and A/B-measured slower at sf1/sf10 (its 128-key
-    * sort-fallback pays the sort plus object churn — see
-    * Snapshot.latestByKey); max_by stays on the measurement.
+    * map-side before the exchange) and NO Window anywhere. r17: an
+    * ObjectHashAggregate alternative was A/B-measured slower at
+    * sf1/sf10 (its 128-key sort-fallback pays the sort plus object
+    * churn — see Snapshot.latestByKey); max_by stays on the
+    * measurement.
     */
   private[graft] def upsertMergePlan(merged: DataFrame): DataFrame = {
     val all = merged.columns.map(col)
@@ -2278,70 +2278,75 @@ object Streaming {
     * row; the oracle reconstructs all of it from `documents`.
     */
   def stIngest(s: SparkSession, d: String): DataFrame = {
-    // retry-determinism pin (r16 ADVICE): the microbatch's round-robin
-    // spread relies on Spark's sort-before-repartition so a retried
-    // map task reproduces the same row→partition assignment — required
-    // for the append-mode parquet sink (a re-draw could duplicate or
-    // lose rows). True by default (SPARK-23207); pinned here against a
-    // deployment that disabled it globally.
-    s.conf.set("spark.sql.execution.sortBeforeRepartition", "true")
     val fixture = ingestFixtureDir(s, d)
     val base = s"/tmp/graft_stream_ingest_out_${graft.Stage.sourceFingerprint(d, "documents")}"
     graft.Stage.deleteRecursively(new java.io.File(base))
     new java.io.File(base).mkdirs()
-    val q = s.readStream
-      .option("maxFilesPerTrigger", 1)
-      .text(fixture)
-      .writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // each trigger is ONE gzip file = ONE scan task (gzip is
-        // unsplittable), and Ingest.pipeline's internal barrier
-        // PRESERVES partitioning — without an explicit spread the whole
-        // AES+Jackson chain for the batch runs on a single core
-        // (measured: 84.4 s at sf10, ~linear in batch bytes, vs the
-        // idle other 31 cores). Round-robin the raw lines across the
-        // session's parallelism first: one cheap text shuffle, then
-        // decrypt/validate run partition-parallel. Scale-adaptive (no
-        // local[32] constant), deterministic under retry (Spark's
-        // sort-before-repartition contract). The parsed frame is
-        // persisted so the landed chain and the dead-letter branch
-        // share ONE Jackson pass over the batch (they used to re-parse
-        // independently — and O(batch) cache is the microbatch bound).
-        val spread = batch.toDF().repartition(
-          batch.sparkSession.sparkContext.defaultParallelism)
-        val parsed = graft.pipeline.Envelope.parse(spread).persist()
-        val landed = graft.pipeline.Ingest.dailyIncrement(
-          graft.pipeline.Ingest.pipelineFromParsed(parsed), "2021-06-15")
-        // the writeDaily layout discipline, append-mode: range-cluster
-        // on (id_part, id) so each task writes a contiguous slice of
-        // partition dirs — without it every task touches every id_part
-        // and a microbatch lands tasks×id_parts small files.
-        // PERSISTED first: repartitionByRange SAMPLES its child for
-        // range boundaries, which otherwise executes the whole
-        // AES+Jackson pipeline a second time per microbatch. Measured
-        // NEUTRAL at sf0.1 (trigger machinery dominates the row), kept
-        // because the second execution is real in the plan and decrypt
-        // is the dominant term at production volume; the microbatch is
-        // bounded, so caching it is O(batch) memory at any scale
-        landed.persist()
-        try {
-          // dead-letter first (r16 ADVICE): it reads ONLY `parsed`, so
-          // writing it before the landed chain materializes `landed`
-          // shrinks the window where both O(batch) caches are held
-          // concurrently to just the landed append itself
-          graft.pipeline.Ingest.malformedFromParsed(parsed)
-            .write.mode("overwrite").text(s"$base/dead/batch$batchId")
-          landed.repartitionByRange(col("id_part"), col("id"))
-            .sortWithinPartitions("id")
-            .write.mode("append")
-            .partitionBy("export_year", "export_month", "export_day", "id_part")
-            .parquet(s"$base/data")
-        } finally { landed.unpersist(); parsed.unpersist() }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    // retry-determinism pin (r16 ADVICE): the microbatch's round-robin
+    // spread relies on Spark's sort-before-repartition so a retried
+    // map task reproduces the same row→partition assignment — required
+    // for the append-mode parquet sink (a re-draw could duplicate or
+    // lose rows). True by default (SPARK-23207); pinned against a
+    // deployment that disabled it, and scoped to this query: the old
+    // value is restored once the stream has drained.
+    val pinKey = "spark.sql.execution.sortBeforeRepartition"
+    val prev = s.conf.get(pinKey)
+    s.conf.set(pinKey, "true")
+    try {
+      val q = s.readStream
+        .option("maxFilesPerTrigger", 1)
+        .text(fixture)
+        .writeStream
+        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+          // each trigger is ONE gzip file = ONE scan task (gzip is
+          // unsplittable), and Ingest.pipeline's internal barrier
+          // PRESERVES partitioning — without an explicit spread the whole
+          // AES+Jackson chain for the batch runs on a single core
+          // (measured: 84.4 s at sf10, ~linear in batch bytes, vs the
+          // idle other 31 cores). Round-robin the raw lines across the
+          // session's parallelism first: one cheap text shuffle, then
+          // decrypt/validate run partition-parallel. Scale-adaptive (no
+          // local[32] constant), deterministic under retry (Spark's
+          // sort-before-repartition contract). The parsed frame is
+          // persisted so the landed chain and the dead-letter branch
+          // share ONE Jackson pass over the batch (they used to re-parse
+          // independently — and O(batch) cache is the microbatch bound).
+          val spread = batch.toDF().repartition(
+            batch.sparkSession.sparkContext.defaultParallelism)
+          val parsed = graft.pipeline.Envelope.parse(spread).persist()
+          val landed = graft.pipeline.Ingest.dailyIncrement(
+            graft.pipeline.Ingest.pipelineFromParsed(parsed), "2021-06-15")
+          // the writeDaily layout discipline, append-mode: range-cluster
+          // on (id_part, id) so each task writes a contiguous slice of
+          // partition dirs — without it every task touches every id_part
+          // and a microbatch lands tasks×id_parts small files.
+          // PERSISTED first: repartitionByRange SAMPLES its child for
+          // range boundaries, which otherwise executes the whole
+          // AES+Jackson pipeline a second time per microbatch. Measured
+          // NEUTRAL at sf0.1 (trigger machinery dominates the row), kept
+          // because the second execution is real in the plan and decrypt
+          // is the dominant term at production volume; the microbatch is
+          // bounded, so caching it is O(batch) memory at any scale
+          landed.persist()
+          try {
+            // dead-letter first (r16 ADVICE): it reads ONLY `parsed`, so
+            // writing it before the landed chain materializes `landed`
+            // shrinks the window where both O(batch) caches are held
+            // concurrently to just the landed append itself
+            graft.pipeline.Ingest.malformedFromParsed(parsed)
+              .write.mode("overwrite").text(s"$base/dead/batch$batchId")
+            landed.repartitionByRange(col("id_part"), col("id"))
+              .sortWithinPartitions("id")
+              .write.mode("append")
+              .partitionBy("export_year", "export_month", "export_day", "id_part")
+              .parquet(s"$base/data")
+          } finally { landed.unpersist(); parsed.unpersist() }
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+    } finally s.conf.set(pinKey, prev)
     // the canonical id is `{"id":"<n>"}` for object ids (the fixture's
     // shape; scalar ids pass through uc_id unchanged) — unwrap for the
     // numeric range

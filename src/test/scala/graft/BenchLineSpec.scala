@@ -12,15 +12,18 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 class BenchLineSpec extends AnyFunSuite {
   private val om = new ObjectMapper()
 
-  private def fullLine(n: Int, failed: Seq[String] = Nil): String = {
+  private def fullLine(n: Int, failed: Seq[String] = Nil,
+      restandalone: Int = 1): String = {
     val qs = (1 to n).map(i => s""""q_synthetic_name_$i":${i * 0.037}""")
       .mkString("{", ",", "}")
     val f = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val re = (1 to restandalone).map(i => s""""q_synthetic_name_$i":1.23456789""")
+      .mkString("{", ",", "}")
     s"""{"metric":"total","value":370.537507749,"unit":"sec","value_cold":770.61,""" +
       s""""failed":$f,"sf":"/root/testdata/sf0.1",""" +
       s""""calibration":{"single":0.398991428,"parallel":0.659734853},""" +
       s""""flagged":["q_synthetic_name_1"],""" +
-      s""""restandalone":{"q_synthetic_name_1":1.23456789},""" +
+      s""""restandalone":$re,""" +
       s""""queries_cold":$qs,"queries":$qs}"""
   }
 
@@ -57,6 +60,17 @@ class BenchLineSpec extends AnyFunSuite {
     assert(!node.has("queries_elided"))
     // restandalone survives, rounded
     assert(node.get("restandalone").get("q_synthetic_name_1").asDouble() === 1.23)
+  }
+
+  test("a large restandalone map is elided before the line overflows the budget") {
+    val tiny = Bench.tinyLine(fullLine(258, restandalone = 60))
+    assert(tiny.length <= Bench.TinyLineBudget,
+      s"tiny line is ${tiny.length} B > ${Bench.TinyLineBudget} B")
+    val node = om.readTree(tiny).asInstanceOf[ObjectNode]
+    assert(node.get("value").asDouble() === 370.537507749)
+    assert(node.get("calibration").get("single").asDouble() === 0.398991428)
+    assert(!node.has("restandalone"))
+    assert(node.get("restandalone_elided").asInt() === 60)
   }
 
   test("failed (-1) rows are never folded into the rest-total") {

@@ -29,8 +29,13 @@ class MetricsSpec extends SparkSpec {
     sink.counter("s3gw.ops", 42, Map("verb" -> "put"))
     sink.gauge("state.rows", 12.5)
     sink.timing("query_ms", 830, Map("query" -> "q1_agg"))
+    // quote, backslash, tab and NUL survive the encoding intact
+    val odd = "a\"b\\c\td\u0000e"
+    sink.counter(odd, 1, Map(odd -> odd))
     val lines = readLines(f)
-    assert(lines.map(_.get("kind").asText()) === Seq("counter", "gauge", "timing"))
+    assert(lines.map(_.get("kind").asText()) === Seq("counter", "gauge", "timing", "counter"))
+    assert(lines(3).get("name").asText() === odd)
+    assert(lines(3).get("tags").get(odd).asText() === odd)
     assert(lines(0).get("name").asText() === "s3gw.ops")
     assert(lines(0).get("value").asLong() === 42)
     assert(lines(0).get("tags").get("verb").asText() === "put")

@@ -171,6 +171,43 @@ class OperatorsSpec extends SparkSpec {
     assert(found.subsetOf(all), s"unverified pairs reported: ${found -- all}")
   }
 
+  test("build-once artifact names: md5-8 golden, re-keyed by any source part-file change") {
+    // the golden keeps every /tmp/graft_* name byte-identical across
+    // refactors of the helper
+    assert(graft.Stage.fp("abc") === "900150983cd24fb0")
+    val d = java.nio.file.Files.createTempDirectory("graft_fp").toFile
+    try {
+      for (t <- Seq("documents", "embeddings")) {
+        val dir = new java.io.File(d, s"$t.parquet")
+        assert(dir.mkdirs())
+        java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sfDir/$t.parquet"),
+          new java.io.File(dir, "part-0.parquet").toPath)
+      }
+      def names(): Seq[String] = Seq(
+        graft.Stage.sourceFingerprint(d.getPath, "documents"),
+        Dedup.componentsDir(d.getPath).getName,
+        Dedup.edgesDir(d.getPath).getName,
+        Dedup.dedupIndexDir(d.getPath).getName,
+        Ann.centroidsFile(d.getPath, "spec", 8).getName)
+      assert(names() === names(), "an untouched copy must keep every name")
+      def changed(t: String, edit: java.io.File => Boolean): Seq[Boolean] = {
+        val before = names()
+        assert(edit(new java.io.File(d, s"$t.parquet")))
+        names().zip(before).map { case (a, b) => a != b }
+      }
+      val touch = (dir: java.io.File) =>
+        new java.io.File(dir, "part-0.parquet").setLastModified(1000L)
+      val add = (dir: java.io.File) =>
+        new java.io.File(dir, "part-1.parquet").createNewFile()
+      // the first four key on documents, the codebook on embeddings
+      val docs = Seq(true, true, true, true, false)
+      assert(changed("documents", touch) === docs)
+      assert(changed("documents", add) === docs)
+      assert(changed("embeddings", touch) === docs.map(!_))
+      assert(changed("embeddings", add) === docs.map(!_))
+    } finally graft.Stage.deleteRecursively(d)
+  }
+
   test("Stage.refreshArtifact: a cached plan over a rebuilt path serves the NEW bytes") {
     // regression for the r6 red test: a Stage.cached derived plan over a
     // parquet artifact kept serving pre-rebuild rows after the directory

@@ -133,8 +133,6 @@ class PlanLintSpec extends SparkSpec {
     "operators/Text.scala" -> (1, "Misra-Gries candidate set (≤ heavy-hitter budget rows)"),
     "operators/Skew.scala" -> (1, "skewed-key sample for salting decision (bounded top-N)"),
     "operators/RangeRank.scala" -> (2, "per-(group,bucket) count grid for rank prefix offsets (≤ |groups|·buckets rows); tieSplit composite-boundary sample (≤ 64·buckets rows by sampling fraction)"),
-    "SkewBench.scala" -> (3, "skew-evidence harness: ≤7-row segment aggregates (twin-equality asserts) and the per-lang top-K table — bounded results of the timed legs, never data-scale rows"),
-    "RankTieProbe.scala" -> (1, "heavy-tie probe harness: one-row rank-checksum aggregate per timed leg"),
   )
 
   test("driver-collect lint: every product .collect() site is within its reviewed budget") {

@@ -1048,6 +1048,21 @@ class StreamingSpec extends SparkSpec {
     assert(requarantined.count() === expectedDead)
   }
 
+  test("st_ingest scopes its sortBeforeRepartition pin: the session value survives, accounting unchanged") {
+    val key = "spark.sql.execution.sortBeforeRepartition"
+    val prev = spark.conf.get(key)
+    def accounting(): Seq[String] =
+      Streaming.stIngest(spark, sfDir).collect().map(_.toString).sorted.toSeq
+    try {
+      spark.conf.set(key, "true")
+      val pinned = accounting()
+      spark.conf.set(key, "false")
+      val scoped = accounting()
+      assert(spark.conf.get(key) === "false", "stIngest leaked its pin into the session")
+      assert(scoped === pinned)
+    } finally spark.conf.set(key, prev)
+  }
+
   test("checkpoint recovery: a restarted query resumes where it stopped, nothing reprocessed") {
     import java.io.File
     import org.apache.spark.sql.functions.col

@@ -23,24 +23,8 @@ Per-replica transforms (replica 0 is the identity):
    property for inner products).
 
 Usage:
-  python3 tools/gen_sf.py [sf_dir] [out_dir] [factor] [mode]
+  python3 tools/gen_sf.py [sf_dir] [out_dir] [factor]
   SPARK_GRAFT_SF_DIR=<out_dir> SPARK_GRAFT_CPUS=32 sbt "runMain graft.Bench"
-
-mode (default "uniform") — "skew" produces the HOSTILE layout the
-uniform replication can never produce, for grading the skew-mitigation
-paths against genuinely hot keys:
- - events: user_id drawn zipf-like with a heavy head — the top user
-   receives ~70% of ALL events across every replica (the "null key"
-   shape: a default/missing id that takes most of a real table), the
-   2nd ~15%, the 3rd ~8%, the rest keep their per-replica offset ids
-   (a long uniform tail). Assignment hashes the (already offset)
-   event_id, so it is deterministic and timestamp-independent.
- - documents: one VIRAL document — 10% of every replica's docs carry
-   byte-identical text (the corpus's min-doc_id text, lang pinned to
-   its lang), the exact-dup/shingle hot key a crawl snapshot shows when
-   a boilerplate page floods the crawl.
-Everything else scales as in uniform mode. Skew mode is for
-bench/evidence runs (graft.SkewBench), not the oracle gate.
 """
 import os
 import shutil
@@ -56,8 +40,6 @@ def main():
     sf = os.path.abspath(sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1")
     out = sys.argv[2] if len(sys.argv) > 2 else "/tmp/graft_sf1"
     factor = int(sys.argv[3]) if len(sys.argv) > 3 else 10
-    mode = sys.argv[4] if len(sys.argv) > 4 else "uniform"
-    assert mode in ("uniform", "skew"), f"unknown mode {mode}"
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
     con = duckdb.connect()
@@ -100,47 +82,18 @@ def main():
 
     ev_off = off("events", "event_id")
     u_off = off("events", "user_id")
-    if mode == "skew":
-        hot = con.sql(f"SELECT MIN(user_id) FROM '{sf}/events.parquet'").fetchone()[0]
-
-        def ev_tier(i):
-            eid = f"event_id + {ev_off}*{i}"
-            return (
-                f"SELECT {eid} AS event_id, ts, "
-                f"CASE WHEN hash({eid}) % 100 < 70 THEN {hot} "
-                f"     WHEN hash({eid}) % 100 < 85 THEN {hot} + {u_off} "
-                f"     WHEN hash({eid}) % 100 < 93 THEN {hot} + {u_off} * 2 "
-                f"     ELSE user_id + {u_off}*{i} END AS user_id, "
-                f"event_type, value, props FROM '{sf}/events.parquet'")
-        scale("events", ev_tier)
-    else:
-        scale("events", lambda i: (
-            f"SELECT event_id + {ev_off}*{i} AS event_id, ts, "
-            f"user_id + {u_off}*{i} AS user_id, event_type, value, props "
-            f"FROM '{sf}/events.parquet'"))
+    scale("events", lambda i: (
+        f"SELECT event_id + {ev_off}*{i} AS event_id, ts, "
+        f"user_id + {u_off}*{i} AS user_id, event_type, value, props "
+        f"FROM '{sf}/events.parquet'"))
 
     doc_off = off("documents", "doc_id")
-    if mode == "skew":
-        vtext, vlang, vchars = con.sql(
-            f"SELECT text, lang, n_chars FROM '{sf}/documents.parquet' "
-            f"ORDER BY doc_id LIMIT 1").fetchone()
-        vtext = vtext.replace("'", "''")
 
-        def doc_tier(i):
-            cipher = tier_cipher(i).replace("'", "''")
-            return (f"SELECT doc_id + {doc_off}*{i} AS doc_id, "
-                    f"CASE WHEN doc_id % 10 = 3 THEN '{vtext}' "
-                    f"ELSE translate(text, '{ALPHABET}', '{cipher}') END AS text, "
-                    f"CASE WHEN doc_id % 10 = 3 THEN '{vlang}' ELSE lang END AS lang, "
-                    f"source, "
-                    f"CASE WHEN doc_id % 10 = 3 THEN {vchars} ELSE n_chars END AS n_chars "
-                    f"FROM '{sf}/documents.parquet'")
-    else:
-        def doc_tier(i):
-            cipher = tier_cipher(i).replace("'", "''")
-            return (f"SELECT doc_id + {doc_off}*{i} AS doc_id, "
-                    f"translate(text, '{ALPHABET}', '{cipher}') AS text, "
-                    f"lang, source, n_chars FROM '{sf}/documents.parquet'")
+    def doc_tier(i):
+        cipher = tier_cipher(i).replace("'", "''")
+        return (f"SELECT doc_id + {doc_off}*{i} AS doc_id, "
+                f"translate(text, '{ALPHABET}', '{cipher}') AS text, "
+                f"lang, source, n_chars FROM '{sf}/documents.parquet'")
     scale("documents", doc_tier)
 
     vec_off = off("embeddings", "vec_id")
