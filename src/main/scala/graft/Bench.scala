@@ -425,21 +425,18 @@ object Bench {
   }
 
   /** Children write their line ONLY to SPARK_GRAFT_OUT (the parent owns
-    * stdout and BENCH_LOCAL.json); top-level invocations print the line
-    * twice (println routes through sbt's logger under a non-forked
-    * runMain and lands with an "[info] " prefix — also emit the bare
-    * line straight to fd 1) and persist it to BENCH_LOCAL.json.
+    * stdout and BENCH_LOCAL.json); top-level invocations print the
+    * [[tinyLine]] projection twice (println routes through sbt's logger
+    * under a non-forked runMain and lands with an "[info] " prefix —
+    * also emit the bare line straight to fd 1) and persist the FULL line
+    * to BENCH_LOCAL.json.
     *
-    * The stdout line is SLIMMED and TAIL-LOADED (r14): the round driver
-    * stores only the last few KB of the line, and r13's artifact lost
-    * the whole front (`parsed: null`, a 73-query tail) — so per-chunk
-    * metadata and the cold map are dropped from stdout (they stay in
-    * BENCH_LOCAL.json, the full artifact), and the two maps a
-    * cross-round reader needs to self-adjudicate sit at the VERY END:
-    * `queries` (the sweep numbers), then `restandalone` LAST (the
-    * re-measured truth for any flagged row, ~10 entries) — the tail
-    * that survives any clip always carries the whole adjudication map
-    * plus as much of the sweep map as fits.
+    * The round driver stores only the last ~2 KB of stdout, clipping
+    * from the head, so the one stdout line is sized to survive whole.
+    * It carries the summary, a compact `queries` map (rows above an
+    * adaptive threshold plus `queries_rest_total`, so it reconciles to
+    * `value`) and `restandalone`; per-chunk metadata, the cold map and
+    * `flagged` (always == restandalone's keys) live in BENCH_LOCAL.json.
     */
   private def emit(line: String): Unit = {
     sys.env.get("SPARK_GRAFT_OUT") match {
@@ -447,54 +444,17 @@ object Bench {
         val w = new java.io.PrintWriter(path)
         try w.println(line) finally w.close()
       case None =>
-        val slim = slimLine(line)
-        // r16: the driver clips its stored line from the HEAD, so even
-        // the slim line loses its opening brace once `queries` grows
-        // past the clip. Print the slim line first (humans, full map),
-        // then a SECOND genuinely-tiny line LAST, so the tail the
-        // driver keeps always holds one complete parseable JSON object.
-        // r17: the r16 tiny line dropped `queries` entirely, which left
-        // the driver's per-query round-over-round comparison EMPTY
-        // (PERF_r16 n_common=0). It now carries a COMPACT queries map —
-        // 2-decimal values, no spaces, and when the full map would push
-        // the line past the driver's ~2 KB tail, only the rows above an
-        // adaptive seconds threshold plus `queries_rest_total` (the sum
-        // of the elided rows, so the map still reconciles to `value`).
-        // The redundant `flagged` array (always == restandalone's keys)
-        // stays on the slim line and in BENCH_LOCAL.json but is dropped
-        // here to buy ~0.4 KB of query rows.
         val tiny = tinyLine(line)
-        println(slim)
-        val fd1 = new java.io.PrintStream(
-          new java.io.FileOutputStream(java.io.FileDescriptor.out), true)
-        fd1.println(slim)
         println(tiny)
-        fd1.println(tiny)
+        new java.io.PrintStream(
+          new java.io.FileOutputStream(java.io.FileDescriptor.out), true)
+          .println(tiny)
         try {
           val w = new java.io.PrintWriter("BENCH_LOCAL.json")
           try w.println(line) finally w.close()
         } catch { case _: Throwable => () }
     }
   }
-
-  /** The stdout projection of the full bench JSON: summary fields, then
-    * `restandalone`, then `queries` last. Falls back to the full line
-    * if reshaping fails — a mangled slimmer must never lose the round.
-    */
-  private def slimLine(line: String): String =
-    try {
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val node = om.readTree(line)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      val out = om.createObjectNode()
-      out.set("full_artifact", om.getNodeFactory.textNode("BENCH_LOCAL.json"))
-      val fields =
-        Seq("metric", "value", "unit", "value_cold", "failed", "sf",
-          "calibration", "warmup_sec", "flagged", "queries", "restandalone")
-      fields.foreach(f => Option(node.get(f)).foreach(out.set[
-        com.fasterxml.jackson.databind.JsonNode](f, _)))
-      om.writeValueAsString(out)
-    } catch { case _: Throwable => line }
 
   /** The clip-proof final stdout line (r17): summary + adjudication +
     * a compact per-query steady map that must fit — WHOLE — inside the

@@ -264,9 +264,9 @@ object Stage {
     * publish atomically (the marker — parquet's own _SUCCESS by
     * default — is written inside the staging tree by the write
     * itself, so publish makes data+marker visible in one step).
-    * Returns the PHYSICAL directory to read. The shared shape behind
-    * every fingerprinted write-once artifact (MVs, dedup indexes,
-    * components, fixture layouts).
+    * Returns the PHYSICAL directory to read. The one build-once path
+    * for every fingerprinted write-once directory (MVs, dedup indexes,
+    * components, bloom index, clone, query and stream fixtures).
     */
   def ensureArtifact(s: org.apache.spark.sql.SparkSession, base: java.io.File,
       marker: String = "_SUCCESS")(build: java.io.File => Unit): java.io.File = {

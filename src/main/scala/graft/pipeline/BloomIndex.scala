@@ -61,13 +61,7 @@ object BloomIndex {
     * scan. Returns (dataPath, manifest).
     */
   def ensureIndex(s: SparkSession, d: String): (String, DataFrame) = {
-    val base = indexDir(d)
-    if (!Stage.published(base, "_DONE")) {
-      // seam-provided staging name: unique under the object-store impl
-      // (the staging tree becomes the physical home — a fixed name
-      // would let a lost publish race delete the winner's live tree)
-      val tmp = graft.Stage.stagingDir(base, "build")
-      tmp.mkdirs()
+    val phys = Stage.ensureArtifact(s, indexDir(d), "_DONE") { tmp =>
       val li = Tables.lineitem(s, d)
         .withColumn("k", lookupKey(col("l_orderkey"), col("l_linenumber")))
       li.repartitionByRange(Files, col("l_partkey"), col("k"))
@@ -77,24 +71,15 @@ object BloomIndex {
       // size filters for the actual rows-per-file (2x headroom keeps
       // the realized fpp at or under the nominal one)
       val expected = math.max(1024L, rows / Files * 2)
-      // store the relative name — the build dir is renamed into place,
-      // so absolute paths captured here would dangle after publish
+      // store the relative name — the staging dir is not the published
+      // name under POSIX, so absolute paths captured here would dangle
       back.groupBy(regexp_extract(input_file_name(), "([^/]+)$", 1).as("file"))
         .agg(graft.functions.bloom_build(col("k"), expected, Fpp).as("bloom"),
           min("k").as("mn_k"), max("k").as("mx_k"),
           count(lit(1)).as("n"))
         .coalesce(1).write.parquet(s"$tmp/manifest")
-      // marker written INSIDE tmp: the rename publishes data+marker
-      // atomically, so no reader ever sees an index dir without _DONE
       new java.io.File(tmp, "_DONE").createNewFile()
-      // only pre-marker debris (a crashed earlier build) is cleared; a
-      // CONCURRENTLY published index carries its marker and is kept —
-      // publishDir detects the lost race and cleans this staging tree
-      if (!Stage.published(base, "_DONE")) Stage.deletePublished(base)
-      Stage.publishDir(tmp, base, "_DONE")
-      Stage.refreshArtifact(s, Stage.resolved(base))
     }
-    val phys = Stage.resolved(base)
     (s"$phys/data", s.read.parquet(s"$phys/manifest"))
   }
 

@@ -111,8 +111,7 @@ object Bucketing {
     * the difference between scanning every partition and only the ones
     * the dim selects. The query self-checks the pruning filter is in
     * the plan. Fixture: orders written once per scale dir partitioned
-    * by year, plus a tiny years dim, built under a temp name and moved
-    * into place last.
+    * by year, plus a tiny years dim, built through Stage.ensureArtifact.
     */
   def qDpp(s: SparkSession, d: String): DataFrame = {
     val base = new java.io.File(s"/tmp/graft_dpp_${graft.Stage.sourceFingerprint(d, "orders")}")

@@ -123,7 +123,8 @@ object Envelope {
     * ingesters.py:109) — then read back as text. Queries that consume
     * envelopes measure the PIPELINE (parse→decrypt→normalize), not the
     * fixture synthesis; and reading gz JSONL exercises the production
-    * read path. `_SUCCESS` gates against a half-written cache.
+    * read path. Built through Stage.ensureArtifact, so a half-written
+    * cache is never read.
     */
   def synthesizeCached(s: SparkSession, dir: String): DataFrame =
     cachedLines(s, dir, "main")(synthesize)
@@ -133,11 +134,12 @@ object Envelope {
 
   private def cachedLines(s: SparkSession, dir: String, tag: String)(
       f: (SparkSession, String) => DataFrame): DataFrame = {
-    val path = s"/tmp/graft_envelope_${tag}_${graft.Stage.sourceFingerprint(dir, "documents")}"
-    if (!new java.io.File(path, "_SUCCESS").exists())
-      f(s, dir).write.mode("overwrite")
-        .option("compression", "gzip").text(path)
-    s.read.text(path)
+    val base = new java.io.File(
+      s"/tmp/graft_envelope_${tag}_${graft.Stage.sourceFingerprint(dir, "documents")}")
+    val phys = graft.Stage.ensureArtifact(s, base) { tmp =>
+      f(s, dir).write.option("compression", "gzip").text(tmp.getPath)
+    }
+    s.read.text(phys.getPath)
   }
 
   /** documents → data:businessAudit envelopes: the dbObject is an audit

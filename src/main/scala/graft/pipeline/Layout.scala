@@ -592,8 +592,7 @@ object Layout {
     // clone identity = the LOGICAL layout name + _clone (a clone of a
     // pointer-published layout must not inherit the physical suffix)
     val clone = new java.io.File(layoutDir(d).getPath + "_clone")
-    if (!graft.Stage.published(clone, "_CLONED")) {
-      val tmp = graft.Stage.stagingDir(clone, "build")
+    graft.Stage.ensureArtifact(s, clone, "_CLONED") { tmp =>
       graft.Stage.linkTree(new java.io.File(src, "data"), new java.io.File(tmp, "data"))
       graft.Stage.linkTree(new java.io.File(src, "manifest"), new java.io.File(tmp, "manifest"))
       Seq("_BOUNDS", "_SOURCES").foreach { n =>
@@ -601,15 +600,8 @@ object Layout {
         if (f.exists())
           java.nio.file.Files.copy(f.toPath, new java.io.File(tmp, n).toPath)
       }
-      // marker INSIDE tmp: the publish (rename or pointer commit) is
-      // atomic — no window where a visible clone lacks its marker
       new java.io.File(tmp, "_CLONED").createNewFile()
-      if (!graft.Stage.published(clone, "_CLONED"))
-        graft.Stage.deletePublished(clone) // unmarked partial only
-      graft.Stage.publishDir(tmp, clone, "_CLONED")
-      graft.Stage.refreshArtifact(s, graft.Stage.resolved(clone))
-    }
-    graft.Stage.resolved(clone).getPath
+    }.getPath
   }
 
   def pClone(s: SparkSession, d: String): DataFrame = {

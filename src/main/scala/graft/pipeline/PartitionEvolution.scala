@@ -51,23 +51,16 @@ object PartitionEvolution {
     */
   def ensureLayout(s: SparkSession, d: String): (String, Long) = {
     val base = baseDir(d)
-    // the cutoff is a pure function of the fingerprinted source; an
-    // already-published layout serves it from its _CUTOFF file rather
-    // than re-scanning events for min/max on every invocation
-    val cutoffFile = new java.io.File(Stage.resolved(base), "_CUTOFF")
-    if (Stage.published(base, "_DONE") && cutoffFile.exists())
-      return (Stage.resolved(base).getPath,
-        scala.io.Source.fromFile(cutoffFile, "UTF-8").mkString.trim.toLong)
-    // pre-_CUTOFF layouts (or a missing marker) rebuild cleanly —
-    // deletePublished drops the commit record before the bytes
-    if (Stage.published(base, "_DONE") && !cutoffFile.exists())
+    // the cutoff is a pure function of the fingerprinted source; a
+    // published layout serves it from its _CUTOFF file rather than
+    // re-scanning events for min/max on every invocation. Pre-_CUTOFF
+    // layouts rebuild cleanly — deletePublished drops the commit record
+    // before the bytes
+    if (Stage.published(base, "_DONE")
+        && !new java.io.File(Stage.resolved(base), "_CUTOFF").exists())
       Stage.deletePublished(base)
-    val cd = cutoffDay(s, d)
-    if (!Stage.published(base, "_DONE")) {
-      // seam-provided staging name (unique under the object-store
-      // impl — see BloomIndex.ensureIndex for the race this prevents)
-      val tmp = graft.Stage.stagingDir(base, "build")
-      tmp.mkdirs()
+    val phys = Stage.ensureArtifact(s, base, "_DONE") { tmp =>
+      val cd = cutoffDay(s, d)
       val ev = Tables.events(s, d)
         .withColumn("us", unix_micros(col("ts")))
         .withColumn("pdate", expr(s"us div $DayUs"))
@@ -81,15 +74,10 @@ object PartitionEvolution {
         .write.partitionBy("pdate", "phour").parquet(s"$tmp/gen2")
       val w = new java.io.PrintWriter(new java.io.File(tmp, "_CUTOFF"), "UTF-8")
       try w.print(cd.toString) finally w.close()
-      // marker INSIDE tmp (atomic publish, matching _CUTOFF), and the
-      // lost-race branch in publishDir deletes this staging tree
-      // instead of leaking a fully built gen1+gen2 copy in tmpdir
       new java.io.File(tmp, "_DONE").createNewFile()
-      if (!Stage.published(base, "_DONE")) Stage.deletePublished(base)
-      Stage.publishDir(tmp, base, "_DONE")
-      Stage.refreshArtifact(s, Stage.resolved(base))
     }
-    (Stage.resolved(base).getPath, cd)
+    val cutoff = scala.io.Source.fromFile(new java.io.File(phys, "_CUTOFF"), "UTF-8")
+    try (phys.getPath, cutoff.mkString.trim.toLong) finally cutoff.close()
   }
 
   /** The two generation scans with the SAME time predicate ([cutoff−2d,

@@ -84,18 +84,13 @@ object Formats {
     * Generation 1 (even order keys) lacks o_orderpriority; generation 2
     * carries it. A mergeSchema read unifies the layouts, old rows
     * surface the new column as NULL, and the aggregation accounts for
-    * both. The fixture is written once per scale dir under a temp name
-    * and moved into place last.
+    * both. The fixture is built once per scale dir through
+    * Stage.ensureArtifact; its marker is the LAST write's own
+    * `_SUCCESS`, so a crash between the two writes never publishes.
     */
   def pSchemaEvolution(s: SparkSession, d: String): DataFrame = {
     val base = new java.io.File(s"/tmp/graft_evo_${graft.Stage.sourceFingerprint(d, "orders")}")
-    if (!base.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      val tmp = new java.io.File(base.getPath + ".build")
-      rm(tmp)
+    val phys = graft.Stage.ensureArtifact(s, base, "gen=2/_SUCCESS") { tmp =>
       val orders = Tables.orders(s, d)
       orders.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -103,10 +98,8 @@ object Formats {
       orders.filter(col("o_orderkey") % 2 =!= 0)
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderpriority")
         .write.parquet(s"${tmp.getPath}/gen=2")
-      if (!tmp.renameTo(base)) rm(tmp)
-      graft.Stage.refreshArtifact(s, base) // same-path rebuild: drop stale cached plans
     }
-    s.read.option("mergeSchema", "true").parquet(base.getPath)
+    s.read.option("mergeSchema", "true").parquet(phys.getPath)
       .groupBy(coalesce(col("o_orderpriority"), lit("<pre-schema>")).as("priority"))
       .agg(count(lit(1)).as("n_orders"),
         QueryDef.moneySum(col("o_totalprice")).as("total"))

@@ -86,6 +86,32 @@ object Streaming {
   private def fixtureKey(d: String): String =
     graft.Stage.sourceFingerprint(d, "events")
 
+  /** A multi-microbatch file-source fixture, built once through
+    * [[graft.Stage.ensureArtifact]]: each slice is written as ONE part
+    * file, renamed `b<i><ext>` and stamped with a staggered mtime, since
+    * the file source under maxFilesPerTrigger=1 takes files in
+    * modification-time order (b0 < b1 < b2). `_SUCCESS` goes inside the
+    * staging tree last (the file source skips `_`-prefixed names).
+    * `slices` is by-name: a published fixture never plans its inputs.
+    * Returns the physical directory to read.
+    */
+  private def slicedFixtureDir(s: SparkSession, base: String,
+      ext: String = ".parquet",
+      write: (DataFrame, String) => Unit = (df, p) => df.write.parquet(p))(
+      slices: => Seq[DataFrame]): String =
+    graft.Stage.ensureArtifact(s, new java.io.File(base)) { tmp =>
+      slices.zipWithIndex.foreach { case (df, i) =>
+        val stage = new java.io.File(tmp, s"stage$i")
+        write(df.coalesce(1), stage.getPath)
+        val part = stage.listFiles().filter(_.getName.startsWith("part-")).head
+        val target = new java.io.File(tmp, s"b$i$ext")
+        java.nio.file.Files.move(part.toPath, target.toPath)
+        target.setLastModified(1600000000000L + i * 60000L)
+        graft.Stage.deleteRecursively(stage)
+      }
+      new java.io.File(tmp, "_SUCCESS").createNewFile()
+    }.getPath
+
   private[graft] def runToMemory(streamed: DataFrame, name: String, mode: OutputMode): DataFrame =
     drainToMemory(streamed, name, mode)._1
 
@@ -120,21 +146,8 @@ object Streaming {
         q0.awaitTermination()
         q0
       } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    dumpProgress(q, name)
     (spark.table(name), q)
   }
-
-  /** Diagnostic seam (SPARK_GRAFT_STREAM_PROGRESS=1): per-microbatch
-    * StreamingQueryProgress JSON to stderr — durationMs breakdown
-    * (addBatch/getBatch/latestOffset/queryPlanning/walCommit/
-    * commitOffsets) and state-operator commit metrics, the numbers a
-    * deployment needs to size trigger intervals and state partitions.
-    */
-  private[graft] def dumpProgress(
-      q: org.apache.spark.sql.streaming.StreamingQuery, name: String): Unit =
-    if (sys.env.contains("SPARK_GRAFT_STREAM_PROGRESS"))
-      q.recentProgress.foreach(p =>
-        System.err.println(s"[stprog] $name ${p.json}"))
 
   /** Tumbling-window transform shared by the stream and its batch twin. */
   def windowAggTransform(events: DataFrame): DataFrame =
@@ -1199,32 +1212,13 @@ object Streaming {
     * epoch-µs) but keeping event_type so the two join sides can be
     * filtered from the same file stream.
     */
-  private[graft] def outerFixtureDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(s"/tmp/graft_stream_outer3_${fixtureKey(d)}")
-    if (!dir.exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      tmp.mkdirs()
-      val slices = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
-        id => id % 2 === 0, id => id % 4 === 1, id => id % 4 === 3)
-      slices.zipWithIndex.foreach { case (pred, i) =>
-        val stage = new java.io.File(tmp, s"stage$i")
-        Tables.events(s, d)
-          .filter(pred(col("event_id")))
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            unix_micros(col("ts")).as("us"))
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val target = new java.io.File(tmp, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        target.setLastModified(1600000000000L + i * 60000L)
-        graft.Stage.deleteRecursively(stage)
-      }
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
-      graft.Stage.refreshArtifact(s, dir)
+  private[graft] def outerFixtureDir(s: SparkSession, d: String): String =
+    slicedFixtureDir(s, s"/tmp/graft_stream_outer3_${fixtureKey(d)}") {
+      eventIdSlices.map(pred => Tables.events(s, d)
+        .filter(pred(col("event_id")))
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          unix_micros(col("ts")).as("us")))
     }
-    dir.getPath
-  }
 
   /** G5b: stream-stream LEFT OUTER join — the enrichment-stream
     * semantics the inner join (G5) dodges: a purchase with no view in
@@ -1542,36 +1536,23 @@ object Streaming {
     * at the end of batch N uses batch N's watermark — measured on this
     * exact query shape; a 2-batch split therefore never drops anything.
     * ts ships as epoch-µs BIGINT — no TIMESTAMP(NANOS) in the fixture.
-    * Built once per scale dir under a temp name and moved into place
-    * last, so a crashed half-build is never mistaken for a complete
-    * fixture.
+    * Built once per scale dir through [[slicedFixtureDir]]
+    * (Stage.ensureArtifact), so a crashed half-build is never mistaken
+    * for a complete fixture.
     */
-  private[graft] def lateFixtureDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(s"/tmp/graft_stream_late3_${fixtureKey(d)}")
-    if (!dir.exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      tmp.mkdirs()
-      val slices = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
-        id => id % 2 === 0, id => id % 4 === 1, id => id % 4 === 3)
-      slices.zipWithIndex.foreach { case (pred, i) =>
-        val stage = new java.io.File(tmp, s"stage$i")
-        Tables.events(s, d)
-          .filter(pred(col("event_id")))
-          .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val target = new java.io.File(tmp, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        // the file source orders by modification time: b0 < b1 < b2
-        target.setLastModified(1600000000000L + i * 60000L)
-        graft.Stage.deleteRecursively(stage)
-      }
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
-      graft.Stage.refreshArtifact(s, dir) // same-path rebuild: drop stale cached plans
+  private[graft] def lateFixtureDir(s: SparkSession, d: String): String =
+    slicedFixtureDir(s, s"/tmp/graft_stream_late3_${fixtureKey(d)}") {
+      eventIdSlices.map(pred => Tables.events(s, d)
+        .filter(pred(col("event_id")))
+        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us")))
     }
-    dir.getPath
-  }
+
+  /** The late/outer fixtures' event_id residue split: even ids, then
+    * ids ≡ 1 (mod 4), then ids ≡ 3 (mod 4).
+    */
+  private val eventIdSlices =
+    Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
+      id => id % 2 === 0, id => id % 4 === 1, id => id % 4 === 3)
 
   /** G7: watermark late-data semantics — tumbling-window counts in
     * APPEND mode over three file-source microbatches. Batch 0 (even
@@ -1751,9 +1732,7 @@ object Streaming {
       }
       .trigger(Trigger.AvailableNow())
     checkpoint.foreach(cp => w = w.option("checkpointLocation", cp))
-    val q = w.start()
-    q.awaitTermination()
-    dumpProgress(q, s"gen:$base")
+    w.start().awaitTermination()
     gen
   }
 
@@ -1962,29 +1941,12 @@ object Streaming {
     * vec_id % 3 slices with staggered mtimes (the lateFixtureDir
     * pattern on the embeddings table).
     */
-  private[graft] def vecFixtureDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(
-      s"/tmp/graft_stream_vec3_${graft.Stage.sourceFingerprint(d, "embeddings")}")
-    if (!dir.exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      tmp.mkdirs()
-      (0 until 3).foreach { i =>
-        val stage = new java.io.File(tmp, s"stage$i")
-        Tables.embeddings(s, d)
-          .filter(pmod(col("vec_id"), lit(3)) === i)
-          .coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val target = new java.io.File(tmp, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        target.setLastModified(1600000000000L + i * 60000L)
-        graft.Stage.deleteRecursively(stage)
-      }
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
-      graft.Stage.refreshArtifact(s, dir)
+  private[graft] def vecFixtureDir(s: SparkSession, d: String): String =
+    slicedFixtureDir(s,
+      s"/tmp/graft_stream_vec3_${graft.Stage.sourceFingerprint(d, "embeddings")}") {
+      (0 until 3).map(i =>
+        Tables.embeddings(s, d).filter(pmod(col("vec_id"), lit(3)) === i))
     }
-    dir.getPath
-  }
 
   /** G20: streaming vector-index ingestion — CONTINUOUS IVF
     * maintenance, the vector-database write path: the embedding backlog
@@ -2227,33 +2189,17 @@ object Streaming {
     * start-up. Corruption is applied after slicing (a truncated line's
     * id is unparseable, so it could not be sliced by id).
     */
-  private[graft] def ingestFixtureDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(
-      s"/tmp/graft_stream_ingest_${graft.Stage.sourceFingerprint(d, "documents")}")
-    if (!dir.exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      tmp.mkdirs()
+  private[graft] def ingestFixtureDir(s: SparkSession, d: String): String =
+    slicedFixtureDir(s,
+      s"/tmp/graft_stream_ingest_${graft.Stage.sourceFingerprint(d, "documents")}",
+      ".jsonl.gz", (df, p) => df.write.option("compression", "gzip").text(p)) {
       val lines = graft.pipeline.Envelope.synthesize(s, d)
       val id = get_json_object(col("value"), "$.message._id.id").cast("long")
-      (0 until 3).foreach { i =>
-        val stage = new java.io.File(tmp, s"stage$i")
-        lines.filter(id % 3 === i)
-          .select(when(id % 13 === 0,
-              expr("substring(value, 1, length(value) - 5)"))
-            .otherwise(col("value")).as("value"))
-          .coalesce(1).write.option("compression", "gzip").text(stage.getPath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".gz")).head
-        val target = new java.io.File(tmp, s"b$i.jsonl.gz")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        target.setLastModified(1600000000000L + i * 60000L)
-        graft.Stage.deleteRecursively(stage)
-      }
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
-      graft.Stage.refreshArtifact(s, dir)
+      (0 until 3).map(i => lines.filter(id % 3 === i)
+        .select(when(id % 13 === 0,
+            expr("substring(value, 1, length(value) - 5)"))
+          .otherwise(col("value")).as("value")))
     }
-    dir.getPath
-  }
 
   /** G16: the CDI ingest chain AS A STREAMING QUERY — the reference's
     * pipeline (read gz-JSONL envelopes → parse → decrypt → validate →
@@ -2387,26 +2333,22 @@ object Streaming {
     * topic is populated by producers.
     */
   private[graft] def kafkaTopicDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(
+    val base = new java.io.File(
       s"/tmp/graft_kafka_topic_${graft.Stage.sourceFingerprint(d, "documents")}")
-    if (!new java.io.File(dir, "envelopes").exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      val topic = new java.io.File(tmp, "envelopes")
+    val phys = graft.Stage.ensureArtifact(s, base) { tmp =>
       val lines = graft.pipeline.Envelope.synthesize(s, d)
       val id = get_json_object(col("value"), "$.message._id.id").cast("long")
       (0 until 4).foreach { p =>
-        val pd = new java.io.File(topic, s"partition=$p")
+        val pd = new java.io.File(tmp, s"envelopes/partition=$p")
         pd.mkdirs()
         val rows = lines.select(col("value"), id.as("i")).filter(col("i") % 4 === p)
           .orderBy("i").select("value").collect().map(_.getString(0))
         val w = new java.io.PrintWriter(new java.io.File(pd, "log.jsonl"), "UTF-8")
         try rows.foreach(w.println) finally w.close()
       }
-      graft.Stage.deleteRecursively(dir)
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
+      new java.io.File(tmp, "_SUCCESS").createNewFile()
     }
-    s"$dir/envelopes"
+    s"$phys/envelopes"
   }
 
   /** G17: a block-G query driven through the KAFKA-API source — the
@@ -2460,33 +2402,16 @@ object Streaming {
     * parquet files (ascending mtimes), so AvailableNow processes three
     * real microbatches — a day's ingestion arriving in chunks.
     */
-  private[graft] def incFixtureDir(s: SparkSession, d: String): String = {
-    val dir = new java.io.File(s"/tmp/graft_stream_inc_${graft.Stage.sourceFingerprint(d, "documents")}")
-    if (!dir.exists()) {
-      val tmp = new java.io.File(dir.getPath + ".build")
-      graft.Stage.deleteRecursively(tmp)
-      tmp.mkdirs()
+  private[graft] def incFixtureDir(s: SparkSession, d: String): String =
+    slicedFixtureDir(s,
+      s"/tmp/graft_stream_inc_${graft.Stage.sourceFingerprint(d, "documents")}") {
       val inc = graft.operators.Dedup.incrementDocs(s, d)
       val ids = inc.select("doc_id").orderBy("doc_id").collect().map(_.getLong(0))
       val cuts = Seq(ids(ids.length / 3), ids(2 * ids.length / 3))
-      val slices = Seq[org.apache.spark.sql.Column => org.apache.spark.sql.Column](
-        id => id < cuts(0),
-        id => id >= cuts(0) && id < cuts(1),
-        id => id >= cuts(1))
-      slices.zipWithIndex.foreach { case (pred, i) =>
-        val stage = new java.io.File(tmp, s"stage$i")
-        inc.filter(pred(col("doc_id"))).coalesce(1).write.parquet(stage.getPath)
-        val part = stage.listFiles().filter(_.getName.endsWith(".parquet")).head
-        val target = new java.io.File(tmp, s"b$i.parquet")
-        java.nio.file.Files.move(part.toPath, target.toPath)
-        target.setLastModified(1600000000000L + i * 60000L)
-        graft.Stage.deleteRecursively(stage)
-      }
-      if (!tmp.renameTo(dir)) graft.Stage.deleteRecursively(tmp)
-      graft.Stage.refreshArtifact(s, dir) // same-path rebuild: drop stale cached plans
+      val doc = col("doc_id")
+      Seq(doc < cuts(0), doc >= cuts(0) && doc < cuts(1), doc >= cuts(1))
+        .map(c => inc.filter(c))
     }
-    dir.getPath
-  }
 
   /** G13: STREAMING incremental dedup — the continuous form of
     * d_incremental: documents stream in, each microbatch classifies its

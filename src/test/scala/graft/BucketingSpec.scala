@@ -19,11 +19,7 @@ class BucketingSpec extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $table")
     val dir = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + s"/$table")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    if (dir.exists()) rm(dir)
+    if (dir.exists()) graft.Stage.deleteRecursively(dir)
   }
 
   test("join of co-bucketed tables plans without any shuffle exchange") {

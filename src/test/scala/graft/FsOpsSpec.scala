@@ -39,7 +39,9 @@ class FsOpsSpec extends SparkSpec {
     val prefixes = Seq("graft_zorder_", "graft_bloomidx_", "graft_partevo_",
       "graft_time_travel_", "graft_mv_lineitem_", "graft_mv_events_",
       "graft_mv_ordcust_", "graft_dpp_", "graft_components_",
-      "graft_edges_", "graft_dedupindex_", "graft_quantizer_")
+      "graft_edges_", "graft_dedupindex_", "graft_quantizer_",
+      "graft_evo_", "graft_envelope_", "graft_stream_late3_",
+      "graft_stream_outer3_", "graft_kafka_topic_")
     Option(new java.io.File("/tmp").listFiles()).getOrElse(Array.empty)
       .filter(f => prefixes.exists(f.getName.startsWith))
       .foreach { f =>
@@ -57,7 +59,8 @@ class FsOpsSpec extends SparkSpec {
     "p_optimize", "p_bloom_index", "p_partition_evolve",
     // write-once artifacts routed through Stage.ensureArtifact
     "q_mv_rewrite", "q_mv_join", "d_cluster_apply", "d_incremental",
-    "q_dpp",
+    "q_dpp", "p_schema_evolution", "p_envelope_parse", "st_late_data",
+    "st_stream_join_outer", "st_kafka",
     // the transactional sink commit (publish-per-batch)
     "st_exactly_once",
     // incremental MV maintenance (generation publish per microbatch +

@@ -160,13 +160,7 @@ class OrchestrationSpec extends SparkSpec {
     val leftover = new java.io.File(
       spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
         + "/uc_dw_auditlog_test.db")
-    if (leftover.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(leftover)
-    }
+    if (leftover.exists()) graft.Stage.deleteRecursively(leftover)
     val daily = Files.createTempDirectory("graft_audit_daily").toString
     val processed = Ingest.pipeline(Envelope.synthesizeAudit(spark, sfDir))
     AuditPublish.writeAuditDaily(processed, daily)

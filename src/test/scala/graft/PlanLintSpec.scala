@@ -135,17 +135,22 @@ class PlanLintSpec extends SparkSpec {
     "operators/RangeRank.scala" -> (2, "per-(group,bucket) count grid for rank prefix offsets (≤ |groups|·buckets rows); tieSplit composite-boundary sample (≤ 64·buckets rows by sampling fraction)"),
   )
 
-  test("driver-collect lint: every product .collect() site is within its reviewed budget") {
+  /** Every product source file as (path relative to the package root,
+    * contents).
+    */
+  private def productSources: Seq[(String, String)] = {
     val root = new java.io.File("src/main/scala/graft")
     assert(root.isDirectory, s"source root not found from ${new java.io.File(".").getAbsolutePath}")
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
       else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val found = walk(root).map { f =>
-      val rel = f.getPath.stripPrefix("src/main/scala/graft/")
-      val n = "\\.collect\\(\\)".r
-        .findAllIn(new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).size
-      rel -> n
+    walk(root).map(f => f.getPath.stripPrefix("src/main/scala/graft/") ->
+      new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
+  test("driver-collect lint: every product .collect() site is within its reviewed budget") {
+    val found = productSources.map { case (rel, src) =>
+      rel -> "\\.collect\\(\\)".r.findAllIn(src).size
     }.filter(_._2 > 0).toMap
     val over = found.filter { case (f, n) => n > collectBudget.get(f).map(_._1).getOrElse(0) }
     assert(over.isEmpty,
@@ -154,5 +159,20 @@ class PlanLintSpec extends SparkSpec {
     val stale = collectBudget.filter { case (f, (n, _)) => found.getOrElse(f, 0) < n }
     assert(stale.isEmpty,
       s"stale collect budgets (site count dropped — tighten): ${stale.keys.mkString(", ")}")
+  }
+
+  /** Build-once directories publish only through the filesystem seam
+    * (Stage.ensureArtifact / publishDir): a raw `renameTo` bypasses
+    * SPARK_GRAFT_FS, and a fixed `".build"` staging name lets two
+    * builders interleave into one tree and publish it sealed as
+    * complete (FsOps.stagingDir).
+    */
+  test("build-once lint: no raw renameTo or fixed .build staging name outside fs/") {
+    val hits = for {
+      (rel, src) <- productSources if !rel.startsWith("fs/")
+      (line, i) <- src.linesIterator.zipWithIndex
+      if line.contains("renameTo(") || line.contains("\".build\"")
+    } yield s"$rel:${i + 1}: ${line.trim}"
+    assert(hits.isEmpty, hits.mkString("raw build-once publishes:\n", "\n", ""))
   }
 }
