@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
@@ -307,12 +306,7 @@ object Bench {
     */
   private def sweep(sfDir: String, names: Seq[String]): String = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.builder(cpus.toInt).master(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // same optional seam binding as Verify — one shared bind, so an
     // unknown value warns here too instead of silently benching POSIX

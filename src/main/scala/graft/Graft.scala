@@ -73,33 +73,24 @@ object Graft {
     */
   val streaming: graft.streaming.Streaming.type = graft.streaming.Streaming
 
-  /** Register every custom column function (crypto, UC JSON
-    * normalization, vector and sorted-set math — see graft.functions)
-    * into a session's SQL surface (alternative: ship
-    * `graft.functions.GraftExtensions` via `spark.sql.extensions`).
-    */
-  def registerFunctions(spark: SparkSession): Unit =
-    functions.GraftFunctions.registerAll(spark)
-
   def aesCtrDecrypt(data: Column, key: Column, iv: Column): Column =
     functions.aes_ctr_decrypt(data, key, iv)
   def ucValidate(c: Column): Column = functions.uc_validate(c)
   def ucSanitise(c: Column): Column = functions.uc_sanitise(c)
   def vecCosine(a: Column, b: Column): Column = functions.vec_cosine(a, b)
 
-  /** A session configured with this engine's defaults (AQE on, sane
-    * local shuffle parallelism, UTC).
+  /** The one session builder: this engine's shuffle parallelism, UTC,
+    * and [[functions.GraftExtensions]] (graft's SQL functions, the
+    * as-of join strategy and the nested from_json pruning rule).
+    * `withExtensions` adds to a deployment's own `spark.sql.extensions`
+    * rather than replacing it. Callers add only what is theirs (master,
+    * app name, catalog) and call `getOrCreate()`.
     */
-  def session(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession = {
-    val s = SparkSession.builder()
-      .master(master)
+  def builder(shufflePartitions: Int): SparkSession.Builder =
+    SparkSession.builder()
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", true)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+      .withExtensions(new functions.GraftExtensions)
 
   /** Convenience: run the full flagship read path on a directory of
     * envelope JSONL (gz or plain).

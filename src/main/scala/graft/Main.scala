@@ -167,10 +167,7 @@ object Main {
     if (a.unrecognized.nonEmpty)
       Console.err.println(s"WARN unrecognized args ${a.unrecognized.mkString(", ")} " +
         s"for correlation id ${a.correlationId}")
-    val spark = SparkSession.builder()
-      .appName("graft-corporate-data-ingestion")
-      .config("spark.sql.shuffle.partitions", 32)
-      .getOrCreate()
+    val spark = Graft.builder(32).appName("graft-corporate-data-ingestion").getOrCreate()
     try run(spark, a, new InMemoryStatusStore)
     finally spark.stop()
   }

@@ -52,6 +52,23 @@ object Stage {
   def cached(df: DataFrame): DataFrame =
     df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
+  /** Run `body` with the session confs `kvs` set, then put every key
+    * back as it was — re-set to its prior value, or unset when it had
+    * none — whether `body` returns or throws. The one way graft code
+    * changes a session conf temporarily. A plan optimized lazily after
+    * the scope closes sees the restored confs, so a conf-scoped query
+    * must materialize inside `body`.
+    */
+  def withConf[A](s: org.apache.spark.sql.SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** Invalidate every cached plan that reads `dir` after the artifact
     * at that path has been REPLACED in place.
     *

@@ -25,6 +25,8 @@ object Tables {
     * value, so the two sides keep lining up without touching the SQL.
     */
   def events(s: SparkSession, d: String): DataFrame = {
+    // a permanent set, not a Stage.withConf scope: the returned frame
+    // is lazy, and its scan reads the flag when it is planned and run
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(load(s, d, "events"))
   }

@@ -7,12 +7,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.builder(cpus.toInt).master(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // optional filesystem-seam binding: SPARK_GRAFT_FS=hadoop routes
     // every artifact publish/resolve through the conf-routed Hadoop

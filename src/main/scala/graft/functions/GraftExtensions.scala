@@ -1,21 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, IntegerLiteral}
 
-/** SQL surface for graft's custom expressions.
+/** SQL surface for graft's custom expressions, plus the planner
+  * strategy and optimizer rule graft's queries rely on.
   *
-  * Two registration paths, same function table:
-  *  - `GraftExtensions` plugs into a session at build time
-  *    (`SparkSession.builder.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions`) — the
-  *    standard way to ship Catalyst extensions with a library;
-  *  - `GraftFunctions.registerAll(spark)` adds them to an EXISTING
-  *    session's function registry (tests, notebooks).
+  * One registration path: `GraftExtensions` plugs into a session at
+  * build time — `graft.Graft.builder` installs it through
+  * `withExtensions`, and a deployment that builds its own session sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Sessions
+  * derived from it (`newSession()`) inherit the injections.
   *
-  * After either, every graft kernel is callable from SQL:
+  * Every graft kernel is then callable from SQL:
   * `SELECT simhash64(word_shingle_hashes(text, 1)) FROM docs`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -161,12 +159,4 @@ object GraftFunctions {
       info("mmr_select", "mmr_select(ids, relfx, flat_vecs, k) - greedy fixed-point MMR selection over a shortlist block"),
       arity("mmr_select", 4) { case Seq(i, r, f, k) => MmrSelect(i, r, f, intArg("mmr_select", k)) }),
   )
-
-  /** Register into an existing session's function registry. */
-  def registerAll(spark: SparkSession): Unit = {
-    val registry: FunctionRegistry = spark.sessionState.functionRegistry
-    all.foreach { case (name, inf, builder) =>
-      registry.registerFunction(FunctionIdentifier(name), inf, builder)
-    }
-  }
 }

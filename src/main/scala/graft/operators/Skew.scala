@@ -71,8 +71,8 @@ object Skew {
     * mechanism, q_skew_join proves the manual fallback for shapes AQE
     * can't touch.
     */
-  def qSkewAqe(s: SparkSession, d: String): DataFrame = {
-    val wanted = Seq(
+  def qSkewAqe(s: SparkSession, d: String): DataFrame =
+    graft.Stage.withConf(s,
       "spark.sql.adaptive.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.enabled" -> "true",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
@@ -81,10 +81,7 @@ object Skew {
       // keep the planner honest: no broadcast escape hatch, and no
       // partition coalescing hiding the split
       "spark.sql.adaptive.coalescePartitions.enabled" -> "false",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = wanted.map { case (k, _) => k -> s.conf.getOption(k) }
-    wanted.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       // hot FK = min orderkey; 1-row planning value (bounded collect)
       val hot = Tables.orders(s, d).agg(min("o_orderkey")).head().getLong(0)
       // repartition(32) is load-bearing, not cosmetic: a skewed reduce
@@ -116,11 +113,7 @@ object Skew {
       require(planStr.contains("AQEShuffleRead skewed"),
         "no skewed shuffle read in the final plan")
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), out.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
-  }
 
   val qSkewAqeSql: String =
     """WITH hot AS (SELECT MIN(o_orderkey) AS hk FROM orders),

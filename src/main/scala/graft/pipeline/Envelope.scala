@@ -46,11 +46,10 @@ object Envelope {
     * the flag (Ingest.pipeline drops them; Ingest.malformedLines
     * quarantines them).
     */
-  def parse(lines: DataFrame): DataFrame = {
-    // sessions built without GraftExtensions still get the nested
-    // from_json pruning rule (metadata consumers must not pay a
-    // dbObject parse) — idempotent runtime install
-    graft.plans.PruneJsonPaths.ensureInstalled(lines.sparkSession)
+  def parse(lines: DataFrame): DataFrame =
+    // metadata consumers never pay a dbObject parse: the session's
+    // nested from_json pruning rule (plans/PruneJsonPaths, installed by
+    // GraftExtensions) cuts the schema to the fields a query reads
     lines
       .withColumn("m", from_json(col("value"), schema).getField("message"))
       .select(
@@ -65,7 +64,6 @@ object Envelope {
           || col("m.encryption.encryptedEncryptionKey").isNull
           || col("m.encryption.initialisationVector").isNull).as("malformed"),
         col("value"))
-  }
 
   // ---- deterministic fixture synthesis (all SQL-reconstructible) ----
 

@@ -1,6 +1,5 @@
 package graft.pipeline
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 /** End-to-end driver for the REFERENCE Hive DDL dialect — run in its
@@ -24,11 +23,8 @@ object HiveChainMain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val wh = java.nio.file.Files.createTempDirectory("graft_hive_wh").toString
     val ms = java.nio.file.Files.createTempDirectory("graft_hive_ms").toString
-    val spark = SparkSession.builder()
+    val spark = graft.Graft.builder(4)
       .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir", wh)
       .config("javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$ms/db;create=true")

@@ -20,13 +20,11 @@ object HiveExport {
     * post-exchange side instead of being range-sampled and re-inlined
     * per projected field.
     */
-  def exportShape(snapshot: DataFrame, ddl: String): DataFrame = {
-    graft.plans.PruneJsonPaths.ensureInstalled(snapshot.sparkSession)
+  def exportShape(snapshot: DataFrame, ddl: String): DataFrame =
     snapshot
       .select(col("val"), col("id_part"), col("id"))
       .repartitionByRange(col("id_part"), col("id"))
       .select(from_json(col("val"), org.apache.spark.sql.types.StructType.fromDDL(ddl))
         .as("val"))
       .select(col("val.*"))
-  }
 }

@@ -30,16 +30,10 @@ final class SqlRunner(spark: SparkSession) {
     * Returns the script's final result set. Conf-scoped enable,
     * restored after.
     */
-  def executeScript(script: String): DataFrame = {
-    val key = "spark.sql.scripting.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "true")
-    try spark.sql(script)
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  def executeScript(script: String): DataFrame =
+    graft.Stage.withConf(spark, "spark.sql.scripting.enabled" -> "true") {
+      spark.sql(script)
     }
-  }
 
   /** Interpolate `#{key}` placeholders then execute (splitting on ';'
     * when the text holds multiple statements — hive.py:33-50).
@@ -552,19 +546,14 @@ object AuditPublish {
       // dynamic-partition mode scoped to this publish: leaking
       // nonstrict session-wide would let a later typo'd static INSERT
       // scatter rows strict mode exists to reject
-      val dpKey = "hive.exec.dynamic.partition.mode"
-      val dpPrev = spark.conf.getOption(dpKey)
-      spark.conf.set(dpKey, "nonstrict")
-      try sql.executeWithInterpolation(
-        s"""DROP TABLE IF EXISTS $db.$ext;
-           |CREATE EXTERNAL TABLE $db.$ext (val STRING) PARTITIONED BY (date_str STRING) STORED AS TEXTFILE LOCATION '#{location}';
-           |ALTER TABLE $db.$ext ADD IF NOT EXISTS PARTITION(date_str='#{date}') LOCATION '#{location}';
-           |INSERT OVERWRITE TABLE $db.auditlog_raw SELECT * FROM $db.$ext;
-           |DROP TABLE IF EXISTS $db.$ext""".stripMargin,
-        Map("#{location}" -> dailyPath, "#{date}" -> exportDate))
-      finally dpPrev match {
-        case Some(v) => spark.conf.set(dpKey, v)
-        case None => spark.conf.unset(dpKey)
+      graft.Stage.withConf(spark, "hive.exec.dynamic.partition.mode" -> "nonstrict") {
+        sql.executeWithInterpolation(
+          s"""DROP TABLE IF EXISTS $db.$ext;
+             |CREATE EXTERNAL TABLE $db.$ext (val STRING) PARTITIONED BY (date_str STRING) STORED AS TEXTFILE LOCATION '#{location}';
+             |ALTER TABLE $db.$ext ADD IF NOT EXISTS PARTITION(date_str='#{date}') LOCATION '#{location}';
+             |INSERT OVERWRITE TABLE $db.auditlog_raw SELECT * FROM $db.$ext;
+             |DROP TABLE IF EXISTS $db.$ext""".stripMargin,
+          Map("#{location}" -> dailyPath, "#{date}" -> exportDate))
       }
     } else {
       sql.executeWithInterpolation(
@@ -688,17 +677,17 @@ object AuditPublish {
                |SELECT ${cols.mkString(", ")} FROM graft_audit_expanded""".stripMargin)
       }
     } else {
-      val prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try Seq(("auditlog_sec_v", secCols), ("auditlog_red_v", redCols)).foreach {
-        case (table, cols) =>
-          val out = expanded.select(
-            cols.map(c => col(s"j.$c").as(c)) :+ lit(exportDate).as("date_str"): _*)
-          if (!spark.catalog.tableExists(s"$db.$table"))
-            out.write.partitionBy("date_str").format("parquet")
-              .saveAsTable(s"$db.$table")
-          else out.write.mode("overwrite").insertInto(s"$db.$table")
-      } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+      graft.Stage.withConf(spark, "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+        Seq(("auditlog_sec_v", secCols), ("auditlog_red_v", redCols)).foreach {
+          case (table, cols) =>
+            val out = expanded.select(
+              cols.map(c => col(s"j.$c").as(c)) :+ lit(exportDate).as("date_str"): _*)
+            if (!spark.catalog.tableExists(s"$db.$table"))
+              out.write.partitionBy("date_str").format("parquet")
+                .saveAsTable(s"$db.$table")
+            else out.write.mode("overwrite").insertInto(s"$db.$table")
+        }
+      }
     }
   }
 }

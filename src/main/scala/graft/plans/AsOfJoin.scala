@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{
   Alias, Ascending, Attribute, Expression, GenericInternalRow, JoinedRow,
@@ -15,7 +15,9 @@ import org.apache.spark.sql.graftx.PlanBridge
 /** Native as-of (point-in-time) join — the one operator family where
   * composing built-ins genuinely leaves performance on the table, so
   * this follows SURVEY §4's escalation path (c): a custom LogicalPlan +
-  * SparkStrategy + SparkPlan registered through the session.
+  * SparkStrategy + SparkPlan. The strategy is injected at session
+  * build time by `graft.functions.GraftExtensions` (see `Graft.builder`);
+  * a session built without the extension cannot plan the node.
   *
   * Semantics: for each left row, attach the right row with the same key
   * and the greatest right-time <= left-time (backward as-of, ties
@@ -54,7 +56,6 @@ object AsOfJoin {
     require(leftKeys.length == rightKeys.length && leftKeys.nonEmpty,
       "asofJoin needs equal-length, non-empty key lists")
     val spark = left.sparkSession
-    ensureStrategy(spark)
     val lp = PlanBridge.analyzed(left)
     // fresh ExprIds on the right so self-source joins (the common
     // "events as-of events" shape) stay unambiguous
@@ -69,16 +70,6 @@ object AsOfJoin {
       leftKeys.map(res(lp.output, _)), rightKeys.map(res(rOut, _)),
       res(lp.output, leftTime), res(rOut, rightTime))
     PlanBridge.ofRows(spark, plan)
-  }
-
-  /** Idempotently add the planner strategy to an existing session
-    * (build-time alternative: `graft.functions.GraftExtensions`, which
-    * injects it via `spark.sql.extensions`).
-    */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
   }
 }
 

@@ -17,10 +17,9 @@ import graft.queries.QueryDef.dec
 
 /** Materialized-view query rewriting — the warehouse trick that makes
   * repeated aggregates over a 100 TB fact table cost one scan of a
-  * kB-sized summary: a `Rule[LogicalPlan]` (installed through
-  * `experimental.extraOptimizations`, the AsOfJoin strategy's runtime
-  * seam) recognizes aggregations the lineitem summary MV SUBSUMES and
-  * rewrites them to re-aggregate the MV instead:
+  * kB-sized summary: a `Rule[LogicalPlan]` recognizes aggregations the
+  * lineitem summary MV SUBSUMES and rewrites them to re-aggregate the
+  * MV instead:
   *
   *  - grouping keys must be a SUBSET of the MV's (l_returnflag,
   *    l_linestatus) — a coarser roll-up re-aggregates the finer MV
@@ -41,6 +40,11 @@ import graft.queries.QueryDef.dec
   * rule can never rewrite the build to read the artifact it is
   * producing. q_mv_rewrite self-checks the executed plan: it must scan
   * the MV directory and must NOT scan lineitem.parquet.
+  *
+  * The rewrite is the one optimizer rule installed at call time
+  * (`experimental.extraOptimizations`, see [[MvRewrite.ensureRule]]):
+  * it is keyed by the MV's fingerprinted path, which no build-time
+  * extension can know.
   */
 object MvRewrite {
 
@@ -65,8 +69,8 @@ object MvRewrite {
   }
 
   /** Idempotently install the rewrite rule for `mvPath` into the
-    * session's optimizer (runtime twin of a `spark.sql.extensions`
-    * `injectOptimizerRule`).
+    * session's optimizer — the one call-time optimizer install; every
+    * path-independent rule comes from GraftExtensions at build time.
     */
   def ensureRule(s: SparkSession, mvPath: String, mv: MvDef): Unit = {
     val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental

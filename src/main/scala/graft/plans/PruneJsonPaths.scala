@@ -1,6 +1,5 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, ExprId, Expression, ExtractValue, GetStructField, Literal, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
@@ -35,20 +34,12 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *     recomputes them), keeping all exprIds — above the outer
   *     Project the rewrite is invisible.
   *
-  * Installed both through GraftExtensions (operator-optimization
-  * batch) and idempotently at the parse call sites via
-  * [[PruneJsonPaths.ensureInstalled]] (experimental.extraOptimizations
-  * — sessions built without the extension still prune). Both batches
-  * run to fixed point; the rewrite converges because a pruned plan's
+  * Installed once, at session build time, through GraftExtensions
+  * (operator-optimization batch; see `Graft.builder`). The batch runs
+  * to fixed point; the rewrite converges because a pruned plan's
   * consumed paths equal its schema.
   */
 object PruneJsonPaths extends Rule[LogicalPlan] {
-
-  def ensureInstalled(s: SparkSession): Unit = {
-    val exp = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].experimental
-    if (!exp.extraOptimizations.contains(this))
-      exp.extraOptimizations = exp.extraOptimizations :+ this
-  }
 
   private def fieldName(g: GetStructField): String =
     g.name.getOrElse(

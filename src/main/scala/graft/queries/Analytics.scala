@@ -895,18 +895,15 @@ object Analytics {
     * executed eagerly inside the conf window (a `require` proves the
     * bloom was injected — a silent de-optimization fails loudly), the
     * bounded result is returned as a literal frame, and every conf is
-    * restored in a finally. Broadcast is disabled inside the window
-    * because a broadcast join already ships the dim to the fact and
-    * needs no runtime filter.
+    * restored when the `Stage.withConf` scope closes. Broadcast is
+    * disabled inside the window because a broadcast join already ships
+    * the dim to the fact and needs no runtime filter.
     */
-  def qRuntimeFilter(s: SparkSession, d: String): DataFrame = {
-    val wanted = Seq(
+  def qRuntimeFilter(s: SparkSession, d: String): DataFrame =
+    graft.Stage.withConf(s,
       "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = wanted.map { case (k, _) => k -> s.conf.getOption(k) }
-    wanted.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val dim = Tables.orders(s, d)
         .filter(col("o_orderpriority") === "1-URGENT" && col("o_totalprice") > 200000)
       val out = Tables.lineitem(s, d)
@@ -919,17 +916,13 @@ object Analytics {
       require(out.queryExecution.optimizedPlan.toString.contains("might_contain"),
         "runtime bloom filter was not injected into the fact scan")
       // BOUNDEDNESS CONTRACT: collect-then-parallelize pins the
-      // conf-scoped plan (the `finally` restores runtime-filter confs;
+      // conf-scoped plan (the scope exit restores runtime-filter confs;
       // a lazy plan would re-optimize without them). Safe ONLY because
       // the output is a ≤3-row grouped aggregate over l_returnflag —
       // do NOT copy this pattern for unbounded output.
       val rows = out.collect()
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), out.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
-  }
 
   val qRuntimeFilterSql: String =
     """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,

@@ -79,13 +79,10 @@ object Cbo {
     */
   def qCboReorder(s: SparkSession, d: String): DataFrame = {
     val (li, or, cu) = ensureStatsTables(s, d)
-    val wanted = Seq(
+    Stage.withConf(s,
       "spark.sql.cbo.enabled" -> "true",
       "spark.sql.cbo.joinReorder.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prev = wanted.map { case (k, _) => k -> s.conf.getOption(k) }
-    wanted.foreach { case (k, v) => s.conf.set(k, v) }
-    try {
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val out = s.table(li)
         .join(s.table(or), col("l_orderkey") === col("o_orderkey"))
         .join(s.table(cu).filter(col("c_mktsegment") === "BUILDING"),
@@ -113,14 +110,11 @@ object Cbo {
         s"fact table still in the innermost join: $innerTables")
       // BOUNDEDNESS CONTRACT: collect-then-parallelize is safe here ONLY
       // because the result is a global aggregate (exactly one row). It
-      // exists to pin the conf-scoped plan — the `finally` restores CBO
+      // exists to pin the conf-scoped plan — the scope exit restores CBO
       // confs and a lazy plan would silently re-optimize without them.
       // Do NOT copy this pattern for unbounded output.
       val rows = out.collect()
       s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, 1), out.schema)
-    } finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
     }
   }
 

@@ -964,6 +964,8 @@ object PipelineQueries {
   def pTimeTravelSqlSyntax(s: SparkSession, d: String): DataFrame = {
     val base = ensureTimeTravelState(s, d)
     val name = new java.io.File(base).getName
+    // registered for good, not scoped: the returned lazy frame must
+    // still find the catalog when it is planned and run
     s.conf.set("spark.sql.catalog.gen", classOf[graft.catalog.GenCatalog].getName)
     s.conf.set("spark.sql.catalog.gen.root", new java.io.File(base).getParent)
     val df = s.sql(

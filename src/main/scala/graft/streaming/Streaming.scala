@@ -123,29 +123,29 @@ object Streaming {
       mode: OutputMode, options: Map[String, String] = Map.empty)
       : (DataFrame, org.apache.spark.sql.streaming.StreamingQuery) = {
     val spark = streamed.sparkSession
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    // scoped to planning: the streaming query captures the value at
-    // start(); batch queries planned afterwards see the restored conf
-    spark.conf.set("spark.sql.shuffle.partitions", StatePartitions)
-    // event-time timeouts fire only in a NO-DATA micro-batch after the
-    // last data batch advances the watermark; under AvailableNow that
-    // final empty batch exists only while noDataMicroBatches is enabled
-    // (default true, but deployment-overridable). The trailing-tail
-    // state machines (st_stale_users' stale emissions, session closes)
-    // silently lose their tail rows without it — pin it here, where
-    // every drained query starts, rather than trusting the default.
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    val q =
-      try {
-        val q0 = streamed.writeStream
-          .format("memory")
-          .queryName(name)
-          .outputMode(mode)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination()
-        q0
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    // Both pins are scoped to this drain; the stream has terminated
+    // before the scope restores them. The shuffle partitions are
+    // captured by the streaming query at start(); batch queries planned
+    // afterwards see the restored value. Event-time timeouts fire only
+    // in a NO-DATA micro-batch after the last data batch advances the
+    // watermark; under AvailableNow that final empty batch exists only
+    // while noDataMicroBatches is enabled (default true, but
+    // deployment-overridable). The trailing-tail state machines
+    // (st_stale_users' stale emissions, session closes) silently lose
+    // their tail rows without it — pinned here, where every drained
+    // query starts, rather than trusting the default.
+    val q = graft.Stage.withConf(spark,
+        "spark.sql.shuffle.partitions" -> StatePartitions.toString,
+        "spark.sql.streaming.noDataMicroBatches.enabled" -> "true") {
+      val q0 = streamed.writeStream
+        .format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q0.awaitTermination()
+      q0
+    }
     (spark.table(name), q)
   }
 
@@ -1047,16 +1047,9 @@ object Streaming {
   /** Scope the RocksDB state-store provider (transformWithState's
     * required store) around `body`, restoring the previous provider.
     */
-  private[graft] def withRocksDb[A](s: SparkSession)(body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+  private[graft] def withRocksDb[A](s: SparkSession)(body: => A): A =
+    graft.Stage.withConf(s, "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   def stTransformState(s: SparkSession, d: String): DataFrame =
     withRocksDb(s) {
@@ -2235,10 +2228,7 @@ object Streaming {
     // lose rows). True by default (SPARK-23207); pinned against a
     // deployment that disabled it, and scoped to this query: the old
     // value is restored once the stream has drained.
-    val pinKey = "spark.sql.execution.sortBeforeRepartition"
-    val prev = s.conf.get(pinKey)
-    s.conf.set(pinKey, "true")
-    try {
+    graft.Stage.withConf(s, "spark.sql.execution.sortBeforeRepartition" -> "true") {
       val q = s.readStream
         .option("maxFilesPerTrigger", 1)
         .text(fixture)
@@ -2292,7 +2282,7 @@ object Streaming {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-    } finally s.conf.set(pinKey, prev)
+    }
     // the canonical id is `{"id":"<n>"}` for object ids (the fixture's
     // shape; scalar ids pass through uc_id unchanged) — unwrap for the
     // numeric range

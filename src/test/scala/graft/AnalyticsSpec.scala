@@ -26,8 +26,7 @@ class AnalyticsSpec extends SparkSpec {
     val viaWindow = Analytics.qTopkPerGroup(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getInt(3), r.getLong(1), r.getDouble(2))).sorted
     assert(viaAgg.toSeq === viaWindow.toSeq)
-    // and the aggregate is reachable from SQL after registration
-    graft.functions.GraftFunctions.registerAll(spark)
+    // and the aggregate is reachable from SQL through the session's extension
     Tables.orders(spark, sfDir).createOrReplaceTempView("orders_topk")
     val viaSql = spark.sql(
       """SELECT o_custkey, size(topk_rows(struct(o_totalprice, o_orderkey), 2)) AS n
@@ -78,8 +77,7 @@ class AnalyticsSpec extends SparkSpec {
     val n = keys.toDF("k").repartition(4)
       .agg(graft.functions.bitmap_distinct(col("k"))).collect()(0).getLong(0)
     assert(n === keys.distinct.length.toLong)
-    // reachable from SQL after registration
-    graft.functions.GraftFunctions.registerAll(spark)
+    // reachable from SQL through the session's extension
     keys.toDF("k").createOrReplaceTempView("bm_keys")
     assert(spark.sql("SELECT bitmap_distinct(k) FROM bm_keys")
       .collect()(0).getLong(0) === keys.distinct.length.toLong)

@@ -6,13 +6,12 @@ import org.apache.spark.sql.functions._
 import graft.functions.{GraftExtensions, GraftFunctions}
 
 /** SQL-surface registration: every custom kernel callable from
-  * spark.sql after registry injection, with results identical to the
-  * Column-builder API.
+  * spark.sql through the session's GraftExtensions, with results
+  * identical to the Column-builder API.
   */
 class ExtensionsSpec extends SparkSpec {
 
-  test("registerAll makes every graft function callable from SQL") {
-    GraftFunctions.registerAll(spark)
+  test("the session's GraftExtensions make every graft function callable from SQL") {
     Tables.documents(spark, sfDir).createOrReplaceTempView("docs_ext")
 
     val viaSql = spark.sql(
@@ -176,7 +175,6 @@ class ExtensionsSpec extends SparkSpec {
   }
 
   test("crypto + normalization round-trips through the SQL surface") {
-    GraftFunctions.registerAll(spark)
     val row = spark.sql(
       """SELECT aes_ctr_decrypt(
         |    aes_ctr_encrypt('{"a": 1}', base64(unhex(md5('k'))), base64(unhex(md5('iv')))),
@@ -198,8 +196,9 @@ class ExtensionsSpec extends SparkSpec {
 
   test("extension injection is live in a fresh session state") {
     // newSession() rebuilds sessionState from the session's injected
-    // extensions and DROPS registerAll-registered functions — so this
-    // only passes if spark.sql.extensions=GraftExtensions really took
+    // extensions and drops functions registered on the parent's state
+    // at runtime — so this only passes if Graft.builder's
+    // withExtensions(new GraftExtensions) really took
     val fresh = spark.newSession()
     val row = fresh.sql(
       "SELECT uc_id('7') AS i, vec_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head()

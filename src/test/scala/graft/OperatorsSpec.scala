@@ -246,6 +246,27 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("Stage.withConf: prior values come back, absent keys are unset, on return and on throw") {
+    val set = "spark.sql.autoBroadcastJoinThreshold"
+    val absent = "spark.graft.spec.withConfAbsent"
+    val prior = spark.conf.get(set)
+    assert(spark.conf.getOption(absent) === None)
+    try {
+      spark.conf.set(set, "12345")
+      def scoped(body: => Int): Int = graft.Stage.withConf(spark, set -> "-1", absent -> "on") {
+        assert(spark.conf.get(set) === "-1")
+        assert(spark.conf.get(absent) === "on")
+        body
+      }
+      assert(scoped(7) === 7)
+      assert(spark.conf.get(set) === "12345")
+      assert(spark.conf.getOption(absent) === None)
+      intercept[IllegalStateException](scoped(throw new IllegalStateException("boom")))
+      assert(spark.conf.get(set) === "12345")
+      assert(spark.conf.getOption(absent) === None)
+    } finally spark.conf.set(set, prior)
+  }
+
   test("cluster-once/apply-many: d_cluster_apply reads the persisted components artifact") {
     val base = Dedup.componentsDir(sfDir)
     val baseline = Dedup.dClusterApply(spark, sfDir).collect()

@@ -175,4 +175,22 @@ class PlanLintSpec extends SparkSpec {
     } yield s"$rel:${i + 1}: ${line.trim}"
     assert(hits.isEmpty, hits.mkString("raw build-once publishes:\n", "\n", ""))
   }
+
+  /** Session state has one home: every session comes from
+    * `Graft.builder` (which installs GraftExtensions), the only
+    * call-time optimizer install is MvRewrite's path-keyed rule, and
+    * every temporary conf change goes through `Stage.withConf`.
+    */
+  test("session-state lint: builder, experimental and conf.unset each live in one file") {
+    val home = Seq(
+      "SparkSession.builder" -> "Graft.scala",
+      ".experimental" -> "plans/MvRewrite.scala",
+      "conf.unset(" -> "Stage.scala")
+    val strays = for {
+      (call, allowed) <- home
+      (rel, src) <- productSources
+      if src.contains(call) && rel != allowed
+    } yield s"$call in $rel (allowed only in $allowed)"
+    assert(strays.isEmpty, strays.mkString("session state outside its home:\n", "\n", ""))
+  }
 }

@@ -12,16 +12,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .config("spark.sql.adaptive.enabled", true)
-      // the production registration path — specs exercise the real
-      // extension injection, not just registerAll
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    val s = Graft.builder(4).master("local[4]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

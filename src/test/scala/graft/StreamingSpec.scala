@@ -854,21 +854,12 @@ class StreamingSpec extends SparkSpec {
     // RocksDB spills state to local disk with the same exactly-once
     // semantics. Provider is captured at query start (fresh temp
     // checkpoint per run, so no provider-mismatch against a prior one).
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val rocks = Streaming.stFunnel(spark, sfDir).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val batch = graft.queries.Behavior.qFunnel(spark, sfDir).collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(rocks === batch)
-      assert(rocks.values.sum > 0)
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
+    val rocks = Streaming.withRocksDb(spark)(Streaming.stFunnel(spark, sfDir).collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val batch = graft.queries.Behavior.qFunnel(spark, sfDir).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(rocks === batch)
+    assert(rocks.values.sum > 0)
   }
 
   test("upsert merge plan: partial max_by below one exchange, no Window") {
@@ -1048,19 +1039,24 @@ class StreamingSpec extends SparkSpec {
     assert(requarantined.count() === expectedDead)
   }
 
-  test("st_ingest scopes its sortBeforeRepartition pin: the session value survives, accounting unchanged") {
-    val key = "spark.sql.execution.sortBeforeRepartition"
-    val prev = spark.conf.get(key)
-    def accounting(): Seq[String] =
-      Streaming.stIngest(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    try {
-      spark.conf.set(key, "true")
-      val pinned = accounting()
-      spark.conf.set(key, "false")
-      val scoped = accounting()
-      assert(spark.conf.get(key) === "false", "stIngest leaked its pin into the session")
-      assert(scoped === pinned)
-    } finally spark.conf.set(key, prev)
+  test("streaming conf pins are scoped: the session value survives, rows unchanged") {
+    // each query pins a conf it relies on (st_ingest: sortBeforeRepartition;
+    // every drained query: noDataMicroBatches) and must hand the
+    // session's own value back once the stream has drained
+    val cases: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+        org.apache.spark.sql.DataFrame, String)] = Seq(
+      ("st_ingest", Streaming.stIngest, "spark.sql.execution.sortBeforeRepartition"),
+      ("st_stale_users", Streaming.stStaleUsers,
+        "spark.sql.streaming.noDataMicroBatches.enabled"))
+    cases.foreach { case (name, query, key) =>
+      def rows(): Seq[String] = query(spark, sfDir).collect().map(_.toString).sorted.toSeq
+      val pinned = graft.Stage.withConf(spark, key -> "true")(rows())
+      graft.Stage.withConf(spark, key -> "false") {
+        val scoped = rows()
+        assert(spark.conf.get(key) === "false", s"$name leaked its $key pin into the session")
+        assert(scoped === pinned, s"$name rows changed")
+      }
+    }
   }
 
   test("checkpoint recovery: a restarted query resumes where it stopped, nothing reprocessed") {
@@ -1237,20 +1233,18 @@ class StreamingSpec extends SparkSpec {
     val sch = spark.read.parquet(s"${slices.getPath}/b0.parquet").schema
     def stream(dir: String): DataFrame =
       spark.readStream.schema(sch).option("maxFilesPerTrigger", "1").parquet(dir)
-    def drain(df: DataFrame, mode: OutputMode, out: String, cp: String): Unit = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", Streaming.StatePartitions)
-      try {
-        val q = df.writeStream
+    def drain(df: DataFrame, mode: OutputMode, out: String, cp: String): Unit =
+      graft.Stage.withConf(spark,
+          "spark.sql.shuffle.partitions" -> Streaming.StatePartitions.toString) {
+        df.writeStream
           .foreachBatch((b: DataFrame, _: Long) =>
             b.write.mode("append").parquet(out))
           .outputMode(mode)
           .option("checkpointLocation", cp)
           .trigger(Trigger.AvailableNow())
           .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    }
+          .awaitTermination()
+      }
     def copy(src: File, dstDir: File): Unit = {
       val dst = new File(dstDir, src.getName)
       java.nio.file.Files.copy(src.toPath, dst.toPath)
