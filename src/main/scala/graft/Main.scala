@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.pipeline.{InMemoryStatusStore, Runner, StatusStore}
+import graft.pipeline.{InMemoryStatusStore, MetricsSink, Runner, StatusStore}
 
 /** Job entrypoint — the runnable-job surface of the reference
   * (steps/corporate_data_ingestion.py:120-189): the same spark-submit
@@ -167,8 +167,9 @@ object Main {
     if (a.unrecognized.nonEmpty)
       Console.err.println(s"WARN unrecognized args ${a.unrecognized.mkString(", ")} " +
         s"for correlation id ${a.correlationId}")
+    val metrics = MetricsSink.bindFromEnv("main")
     val spark = Graft.builder(32).appName("graft-corporate-data-ingestion").getOrCreate()
     try run(spark, a, new InMemoryStatusStore)
-    finally spark.stop()
+    finally { metrics.flush(); spark.stop() }
   }
 }

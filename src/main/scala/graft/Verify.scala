@@ -16,9 +16,9 @@ object Verify {
     // survives in any operator's artifact path. Default stays POSIX.
     graft.fs.FsOps.bindFromEnv("verify")
     // optional telemetry binding (SPARK_GRAFT_METRICS=path.jsonl or an
-    // http collector URL): per-query wall timings, dump counts, DKS
-    // decrypt-call counters and S3-gateway verb counters all land in
-    // the bound sink — the reference's cloudwatch.sh surface
+    // http collector URL): per-query wall timings, dump counts and DKS
+    // decrypt-call counters all land in the bound sink — the
+    // reference's cloudwatch.sh surface
     graft.pipeline.MetricsSink.bindFromEnv("verify")
     // optional comma-separated name filter (same contract as Bench) —
     // lets scale probes dump a single operator without the full sweep
@@ -87,11 +87,9 @@ object Verify {
       s""" "git_sha": ${q(sha)}, "sf_dir": ${q(sfDir)},""" +
       s""" "fs_seam": ${q(graft.fs.FsOps.current.name)}}"""
     Files.writeString(Paths.get(s"$outDir/verify_meta.json"), meta)
-    // telemetry epilogue: the run's own counts plus the gateway's verb
-    // counters (when the s3gw seam carried this run's IO)
+    // telemetry epilogue: the run's own counts
     sink.counter("verify.queries_dumped", dumped,
       Map("fs" -> graft.fs.FsOps.current.name))
-    graft.pipeline.MetricsSink.publishS3GatewayOps(sink)
     sink.flush()
   }
 }

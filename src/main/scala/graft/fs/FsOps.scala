@@ -184,17 +184,18 @@ trait FsOps {
 object FsOps {
   @volatile var current: FsOps = PosixFsOps
 
-  /** Bind the process-wide seam from `SPARK_GRAFT_FS` — the ONE
-    * binding used by every entry point (Verify, Bench), so a typo'd
-    * value can never silently bench POSIX while claiming another
-    * route: unknown values WARN (to stderr, tagged with the caller)
-    * and keep POSIX, and the active seam is always logged.
+  /** Bind the process-wide seam from `SPARK_GRAFT_FS`
+    * (`posix|hadoop|objectstore`) — the ONE binding used by every
+    * entry point (Verify, Bench), so a typo'd value can never silently
+    * bench POSIX while claiming another route: unknown values WARN (to
+    * stderr, tagged with the caller) and keep POSIX, and the active
+    * seam is always logged. A real store binds as `hadoop`, with an
+    * `s3a://` root routed through the session's Hadoop configuration.
     */
   def bindFromEnv(tag: String): Unit = {
     sys.env.get("SPARK_GRAFT_FS").foreach {
       case "hadoop"      => current = HadoopFsOps
       case "objectstore" => current = ObjectStoreFsOps
-      case "s3gw"        => current = S3GatewayFsOps.bound()
       case "posix" | ""  => ()
       case other =>
         System.err.println(s"[$tag] unknown SPARK_GRAFT_FS '$other', keeping posix")
@@ -487,6 +488,13 @@ class ObjectStoreFsOps(fsFor: Path => FileSystem, val name: String)
     if (stillTorn) { fs.delete(ptr, false); () }
   }
 
+  /** A staging tree's age is its NEWEST object's mtime: directories
+    * on a real store are implicit and carry no mtime (S3A reports 0),
+    * which would make every in-flight build look ancient. An in-flight
+    * build keeps writing, so its newest object is recent and the
+    * caller's age gate spares it, while true crash debris only ever
+    * gets older. A tree with no objects falls back to its own mtime.
+    */
   def stagingDebris(parent: Path): Seq[(Path, Long)] = {
     val fs = fsFor(parent)
     val kids = list(fs, parent)
@@ -499,8 +507,19 @@ class ObjectStoreFsOps(fsFor: Path => FileSystem, val name: String)
       }.toSet
     kids.filter(s => FsOps.isStagingName(s.getPath.getName)
         && !committed.contains(s.getPath.getName))
-      .map(s => (s.getPath, s.getModificationTime)).toSeq
+      .flatMap(s => newestObjectTime(fs, s).map(t => (s.getPath, t))).toSeq
   }
+
+  /** None when the tree vanished mid-listing (a losing publisher
+    * retired it): it is no longer debris.
+    */
+  private def newestObjectTime(fs: FileSystem, tree: FileStatus): Option[Long] =
+    try {
+      val it = fs.listFiles(tree.getPath, true)
+      var newest = -1L
+      while (it.hasNext) newest = math.max(newest, it.next().getModificationTime)
+      Some(if (newest < 0) tree.getModificationTime else newest)
+    } catch { case _: java.io.FileNotFoundException => None }
 
   def deleteDebris(tree: Path): Unit = { fsFor(tree).delete(tree, true); () }
 

@@ -8,8 +8,8 @@ package graft.pipeline
   * stack (CloudWatch agent, StatsD, a scrape file) without touching
   * any operator:
   *
-  *  - counter: monotone event counts (S3 verbs, DKS decrypt calls,
-  *    queries dumped).
+  *  - counter: monotone event counts (DKS decrypt calls, queries
+  *    dumped, per-date pipeline heartbeats).
   *  - gauge:   point-in-time values (rows produced, state rows).
   *  - timing:  durations in milliseconds (per-query verify wall).
   *
@@ -20,11 +20,13 @@ package graft.pipeline
   * Bind points: [[MetricsSink.bindFromEnv]] reads SPARK_GRAFT_METRICS
   * (a filesystem path → [[JsonlMetricsSink]]; an http(s) URL →
   * [[HttpMetricsSink]]; unset → noop). graft.Verify binds it and
-  * emits per-query timings + a dump-count counter; [[KeyService]]
-  * emits decrypt-call counts (the reference's dks_miss — with the
-  * broadcast-join design every non-distinct record is by construction
-  * a cache hit); [[graft.fs.S3Gateway]] op counters publish via
-  * [[MetricsSink.publishS3GatewayOps]].
+  * emits per-query timings + a dump-count counter; graft.Main binds
+  * it for a job run, where [[Runner.runRange]] emits
+  * `pipeline.heartbeat` once per COMPLETED date (the metric
+  * [[AlertRules.standard]] alarms on when it goes silent);
+  * [[KeyService]] emits decrypt-call counts (the reference's dks_miss
+  * — with the broadcast-join design every non-distinct record is by
+  * construction a cache hit).
   */
 trait MetricsSink {
   def counter(name: String, value: Long, tags: Map[String, String] = Map.empty): Unit
@@ -59,17 +61,6 @@ object MetricsSink {
       case _ => ()
     }
     global
-  }
-
-  /** Snapshot the S3 gateway's per-verb op counters into a sink (the
-    * status_metrics.sh publish step: counters are cumulative since
-    * JVM start, tagged so a collector can rate them).
-    */
-  def publishS3GatewayOps(sink: MetricsSink = global): Unit = {
-    import scala.jdk.CollectionConverters._
-    graft.fs.S3Gateway.ops.asScala.toSeq.sortBy(_._1).foreach {
-      case (verb, n) => sink.counter("s3gw.ops", n.get(), Map("verb" -> verb))
-    }
   }
 }
 

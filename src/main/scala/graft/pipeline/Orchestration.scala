@@ -346,6 +346,10 @@ final class Runner(
           status.updateStatus(correlationId, dataProduct, StatusStore.Failed, exportDate)
           throw e
       }
+      // the liveness signal AlertRules.standard's missing-heartbeat rule
+      // watches: one beat per COMPLETED date
+      MetricsSink.global.counter("pipeline.heartbeat", 1,
+        Map("db" -> db, "collection" -> collection, "export_date" -> exportDate))
     }
   }
 

@@ -1103,8 +1103,8 @@ object PipelineQueries {
     orphan.mkdirs()
     // a crashed build leaves PARTIAL DATA FILES, never a bare dir — and
     // on an object store the tree IS its objects (an empty prefix does
-    // not exist, and implicit dirs have no mtime: the s3gw seam derives
-    // tree age from the newest object), so the fixture must carry one
+    // not exist, and implicit dirs have no mtime: the object-store seams
+    // derive tree age from the newest object), so the fixture must carry one
     val partial = new java.io.File(orphan, "part-00000.parquet")
     java.nio.file.Files.write(partial.toPath, Array[Byte](0x50, 0x41, 0x52))
     partial.setLastModified(newestPhys.lastModified - 3600000L)

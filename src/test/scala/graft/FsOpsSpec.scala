@@ -1,6 +1,6 @@
 package graft
 
-import graft.fs.{FsOps, HadoopFsOps, ObjectStoreFsOps, PosixFsOps, S3GatewayFsOps}
+import graft.fs.{FsOps, HadoopFsOps, ObjectStoreFsOps, PosixFsOps}
 
 /** The filesystem seam (graft.fs.FsOps): every Delta-parity verb must
   * produce IDENTICAL answers whether the publish layer is POSIX hard
@@ -16,11 +16,6 @@ import graft.fs.{FsOps, HadoopFsOps, ObjectStoreFsOps, PosixFsOps, S3GatewayFsOp
   * shared-inode behavior that copies deliberately do not have).
   */
 class FsOpsSpec extends SparkSpec {
-
-  // the HTTP object-store gateway binding (S3 wire protocol against a
-  // loopback server; see graft.fs.S3Gateway) — started once, shared by
-  // every parity leg below
-  private lazy val s3gw: FsOps = S3GatewayFsOps.bound()
 
   private def fileKey(f: java.io.File) =
     java.nio.file.Files.readAttributes(f.toPath,
@@ -81,7 +76,7 @@ class FsOpsSpec extends SparkSpec {
       // (pure bytes — the S3A stand-in) and the configuration-routed
       // Hadoop lookup (checksummed LocalFileSystem — a real FileSystem
       // impl with sidecar objects, the s3a:// binding's code path)
-      Seq[FsOps](ObjectStoreFsOps, HadoopFsOps, s3gw).foreach { impl =>
+      Seq[FsOps](ObjectStoreFsOps, HadoopFsOps).foreach { impl =>
         wipeArtifacts()
         val got = FsOps.withFs(impl) {
           covered.map(n => n -> rows(n)).toMap
@@ -98,7 +93,7 @@ class FsOpsSpec extends SparkSpec {
   test("publishFile: atomic single-file commit, loser retires, debris sweepable") {
     val root = java.nio.file.Files.createTempDirectory("graft_pubfile").toFile
     try {
-      Seq[FsOps](PosixFsOps, ObjectStoreFsOps, HadoopFsOps, s3gw).foreach { impl =>
+      Seq[FsOps](PosixFsOps, ObjectStoreFsOps, HadoopFsOps).foreach { impl =>
         FsOps.withFs(impl) {
           val parent = new java.io.File(root, impl.name); parent.mkdirs()
           val target = new java.io.File(parent, "codebook")
@@ -145,7 +140,7 @@ class FsOpsSpec extends SparkSpec {
   test("staging-debris GC: old orphans swept, live commits and fresh stagings survive") {
     val root = java.nio.file.Files.createTempDirectory("graft_gc").toFile
     try {
-      Seq[FsOps](PosixFsOps, ObjectStoreFsOps, HadoopFsOps, s3gw).foreach { impl =>
+      Seq[FsOps](PosixFsOps, ObjectStoreFsOps, HadoopFsOps).foreach { impl =>
         FsOps.withFs(impl) {
           val parent = new java.io.File(root, impl.name); parent.mkdirs()
           // publish one artifact through the seam — under the
@@ -173,11 +168,25 @@ class FsOpsSpec extends SparkSpec {
           fresh.mkdirs()
           val freshFile = new java.io.File(fresh, "part-00000.parquet")
           java.nio.file.Files.write(freshFile.toPath, "inflight".getBytes("UTF-8"))
+          // an in-flight tree whose DIRECTORY looks ancient: a real
+          // store's implicit directories carry no mtime (S3A reports
+          // 0), so the object-store impls must age a tree by its
+          // newest object — its just-written object keeps it alive
+          val stale = if (impl eq PosixFsOps) None else {
+            val d = Stage.stagingDir(target, "build")
+            d.mkdirs()
+            java.nio.file.Files.write(new java.io.File(d, "part-00000.parquet").toPath,
+              "inflight".getBytes("UTF-8"))
+            d.setLastModified(System.currentTimeMillis - 7200000L)
+            Some(d)
+          }
           val swept = Stage.gcStagingDebris(parent,
             System.currentTimeMillis - 3600000L)
           assert(swept === Seq(orphan.getName),
             s"${impl.name}: expected exactly the orphan swept, got $swept")
           assert(!orphan.exists() && fresh.exists())
+          stale.foreach(d => assert(d.exists(),
+            s"${impl.name}: an in-flight tree with an old directory mtime was swept"))
           // the published artifact still resolves to a marked tree
           assert(Stage.published(target, "_SUCCESS"),
             s"${impl.name}: GC damaged a committed artifact")
@@ -194,7 +203,7 @@ class FsOpsSpec extends SparkSpec {
     // torn-window emulation nondeterministic locally — the store-side
     // atomicity it models is covered by the other two.
     try {
-      Seq[FsOps](PosixFsOps, ObjectStoreFsOps, s3gw).foreach { impl =>
+      Seq[FsOps](PosixFsOps, ObjectStoreFsOps).foreach { impl =>
         FsOps.withFs(impl) {
           (0 until 6).foreach { round =>
             val parent = new java.io.File(root, s"${impl.name}_$round")

@@ -207,6 +207,87 @@ class KeyServiceHttpSpec extends SparkSpec {
     } finally Stage.deleteRecursively(dir)
   }
 
+  /** The key SERVICE's side of the rotation case (the engine is only
+    * ever the client): a server SSLContext whose IDENTITY can be
+    * swapped under a live listener — the certificate-rotation runbook
+    * case (reference: bootstrap config_hcs.sh re-mints the HCS cert
+    * material; dks.py just points at cert paths that ops rotate). The
+    * context's KeyManager delegates through a volatile reference:
+    * calling the returned rotate function with a new PKCS12 path (same
+    * store password) makes every SUBSEQUENT handshake present the new
+    * leaf — no listener restart, no dropped service. Clients anchored
+    * on the issuing CA keep working across the swap; clients that
+    * pinned the old LEAF fail their next handshake, which is exactly
+    * the operational signal that a pin (not a CA anchor) is in use.
+    */
+  private def rotatableServerContext(keyStorePath: String, pass: Array[Char])
+      : (javax.net.ssl.SSLContext, String => Unit) = {
+    import javax.net.ssl.{SSLEngine, X509ExtendedKeyManager}
+    def kmOf(path: String): X509ExtendedKeyManager = {
+      val ks = java.security.KeyStore.getInstance("PKCS12")
+      val in = java.nio.file.Files.newInputStream(java.nio.file.Paths.get(path))
+      try ks.load(in, pass) finally in.close()
+      val kmf = javax.net.ssl.KeyManagerFactory.getInstance(
+        javax.net.ssl.KeyManagerFactory.getDefaultAlgorithm)
+      kmf.init(ks, pass)
+      kmf.getKeyManagers.collectFirst { case m: X509ExtendedKeyManager => m }
+        .getOrElse(throw new IllegalStateException(s"no key manager in $path"))
+    }
+    // GENERATION-QUALIFIED aliases: a handshake in flight when rotate()
+    // lands must complete against the keystore that CHOSE its alias —
+    // choose* returns "g<N>:<alias>" and the key/chain lookups route
+    // through generation N, so the delegate swap can never mix one
+    // store's alias with another store's keys (the race that would
+    // abort a handshake mid-rotation). The previous generation is kept
+    // alive for exactly that window; older ones are dropped.
+    object rotatable extends X509ExtendedKeyManager {
+      @volatile private var gens: List[(Int, X509ExtendedKeyManager)] =
+        List((0, kmOf(keyStorePath)))
+      def rotateTo(path: String): Unit = synchronized {
+        val next = gens.head._1 + 1
+        gens = ((next, kmOf(path)) :: gens).take(2)
+      }
+      private def cur = gens.head
+      private def qualify(gen: Int, alias: String): String =
+        if (alias == null) null else s"g$gen:$alias"
+      private def route(q: String): (X509ExtendedKeyManager, String) = {
+        val i = q.indexOf(':')
+        val gen = q.take(i).stripPrefix("g").toInt
+        val km = gens.find(_._1 == gen).map(_._2).getOrElse(cur._2)
+        (km, q.drop(i + 1))
+      }
+      override def getClientAliases(k: String, i: Array[java.security.Principal]) =
+        cur._2.getClientAliases(k, i)
+      override def chooseClientAlias(k: Array[String],
+          i: Array[java.security.Principal], s: java.net.Socket) = {
+        val (g, km) = cur; qualify(g, km.chooseClientAlias(k, i, s))
+      }
+      override def getServerAliases(k: String, i: Array[java.security.Principal]) =
+        cur._2.getServerAliases(k, i)
+      override def chooseServerAlias(k: String,
+          i: Array[java.security.Principal], s: java.net.Socket) = {
+        val (g, km) = cur; qualify(g, km.chooseServerAlias(k, i, s))
+      }
+      override def getCertificateChain(a: String) = {
+        val (km, alias) = route(a); km.getCertificateChain(alias)
+      }
+      override def getPrivateKey(a: String) = {
+        val (km, alias) = route(a); km.getPrivateKey(alias)
+      }
+      override def chooseEngineClientAlias(k: Array[String],
+          i: Array[java.security.Principal], e: SSLEngine) = {
+        val (g, km) = cur; qualify(g, km.chooseEngineClientAlias(k, i, e))
+      }
+      override def chooseEngineServerAlias(k: String,
+          i: Array[java.security.Principal], e: SSLEngine) = {
+        val (g, km) = cur; qualify(g, km.chooseEngineServerAlias(k, i, e))
+      }
+    }
+    val ctx = javax.net.ssl.SSLContext.getInstance("TLS")
+    ctx.init(Array(rotatable), null, null)
+    (ctx, path => rotatable.rotateTo(path))
+  }
+
   test("certificate rotation: keystore swaps under the live service; CA-anchored clients continue, leaf-pinned clients fail") {
     // the rotation runbook case (config_hcs.sh re-mints cert material;
     // ops swap it under the running DKS): a CA signs two successive
@@ -260,7 +341,7 @@ class KeyServiceHttpSpec extends SparkSpec {
         "-file", s"$dir/leaf1.cer",
         "-keystore", s"$dir/trust_leaf1.p12") ++ store: _*)
 
-      val (serverCtx, rotate) = KeyService.rotatableServerContext(
+      val (serverCtx, rotate) = rotatableServerContext(
         s"$dir/leaf1.p12", "changeit".toCharArray)
       val server =
         try com.sun.net.httpserver.HttpsServer.create(

@@ -26,7 +26,7 @@ class MetricsSpec extends SparkSpec {
     val f = java.io.File.createTempFile("graft_metrics", ".jsonl")
     f.delete()
     val sink = new JsonlMetricsSink(f.getPath)
-    sink.counter("s3gw.ops", 42, Map("verb" -> "put"))
+    sink.counter("dks.decrypt_calls", 42, Map("db" -> "corp"))
     sink.gauge("state.rows", 12.5)
     sink.timing("query_ms", 830, Map("query" -> "q1_agg"))
     // quote, backslash, tab and NUL survive the encoding intact
@@ -36,9 +36,9 @@ class MetricsSpec extends SparkSpec {
     assert(lines.map(_.get("kind").asText()) === Seq("counter", "gauge", "timing", "counter"))
     assert(lines(3).get("name").asText() === odd)
     assert(lines(3).get("tags").get(odd).asText() === odd)
-    assert(lines(0).get("name").asText() === "s3gw.ops")
+    assert(lines(0).get("name").asText() === "dks.decrypt_calls")
     assert(lines(0).get("value").asLong() === 42)
-    assert(lines(0).get("tags").get("verb").asText() === "put")
+    assert(lines(0).get("tags").get("db").asText() === "corp")
     assert(lines(1).get("value").asDouble() === 12.5)
     assert(lines(2).get("value").asLong() === 830)
     assert(lines.forall(_.get("ts").asLong() > 0))
@@ -109,14 +109,14 @@ class MetricsSpec extends SparkSpec {
     try {
       val sink = new HttpMetricsSink(
         s"http://127.0.0.1:${server.getAddress.getPort}/metrics")
-      sink.counter("s3gw.ops", 7, Map("verb" -> "get"))
+      sink.counter("dks.decrypt_calls", 7, Map("db" -> "corp"))
       sink.timing("query_ms", 12)
       assert(received.isEmpty, "batch must buffer until flush")
       sink.flush()
       assert(received.size === 2)
       val nodes = scala.jdk.CollectionConverters
         .ListHasAsScala(received).asScala.map(om.readTree).toSeq
-      assert(nodes.map(_.get("name").asText()).toSet === Set("s3gw.ops", "query_ms"))
+      assert(nodes.map(_.get("name").asText()).toSet === Set("dks.decrypt_calls", "query_ms"))
     } finally server.stop(0)
   }
 
@@ -142,7 +142,7 @@ class MetricsSpec extends SparkSpec {
     sink.gauge("stream.lag", 7.0) // new episode
     assert(sink.fired.count(_.rule == "lag") === 2)
     // unrelated metrics never trip a rule
-    sink.counter("s3gw.ops", 100)
+    sink.counter("dks.decrypt_calls", 100)
     assert(sink.fired.size === 3)
   }
 

@@ -28,10 +28,24 @@ class OrchestrationSpec extends SparkSpec {
     layoutFixtures(root, Seq("2021-06-15", "2021-06-16"))
 
     val store = new InMemoryStatusStore
-    new Runner(spark, store).runRange(root, "2021-06-15", "2021-06-16",
+    // record the global sink's heartbeats for the run, then restore it
+    val beats = scala.collection.mutable.ArrayBuffer.empty[Map[String, String]]
+    val prev = MetricsSink.global
+    MetricsSink.global = new MetricsSink {
+      override def counter(n: String, v: Long, t: Map[String, String]): Unit =
+        if (n == "pipeline.heartbeat") beats.synchronized { beats += t; () }
+      override def gauge(n: String, v: Double, t: Map[String, String]): Unit = ()
+      override def timing(n: String, v: Long, t: Map[String, String]): Unit = ()
+    }
+    try new Runner(spark, store).runRange(root, "2021-06-15", "2021-06-16",
       "corp", "documents", out)
+    finally MetricsSink.global = prev
 
     assert(store.getStatus("local", "CDI-corp:documents") === Some(StatusStore.Completed))
+    // one heartbeat per COMPLETED date: the metric AlertRules.standard watches
+    assert(beats.toSeq === Seq(
+      Map("db" -> "corp", "collection" -> "documents", "export_date" -> "2021-06-15"),
+      Map("db" -> "corp", "collection" -> "documents", "export_date" -> "2021-06-16")))
     assert(store.history.toSeq === Seq(
       ("CDI-corp:documents", "2021-06-15", StatusStore.InProgress),
       ("CDI-corp:documents", "2021-06-15", StatusStore.Completed),

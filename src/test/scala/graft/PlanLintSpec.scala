@@ -193,4 +193,15 @@ class PlanLintSpec extends SparkSpec {
     } yield s"$call in $rel (allowed only in $allowed)"
     assert(strays.isEmpty, strays.mkString("session state outside its home:\n", "\n", ""))
   }
+
+  /** The engine is a client of every service it talks to: a loopback
+    * server standing in for one is a test fixture and lives in
+    * src/test.
+    */
+  test("fixture lint: no com.sun.net.httpserver server in product code") {
+    val hits = productSources.collect {
+      case (rel, src) if src.contains("com.sun.net.httpserver") => rel
+    }
+    assert(hits.isEmpty, hits.mkString("loopback servers in product code:\n", "\n", ""))
+  }
 }

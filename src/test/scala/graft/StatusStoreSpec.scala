@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
 
-import graft.pipeline.{FileStatusStore, HttpStatusStore, InMemoryStatusStore, Runner, StatusStore}
+import graft.pipeline.{FileStatusStore, InMemoryStatusStore, Runner, StatusStore}
 
 /** The StatusStore conditional-write guard — the reference's DynamoDB
   * conditional put (dynamodb.py:42-60: a second driver must not flip a
@@ -40,23 +40,6 @@ class StatusStoreSpec extends SparkSpec {
     } finally pool.shutdownNow()
   }
 
-  /** Loopback DynamoDB-wire service (graft.pipeline.DynamoGateway) —
-    * the real HTTP API shape (X-Amz-Target PutItem/UpdateItem/GetItem,
-    * ConditionExpression adjudicated atomically server-side,
-    * ConditionalCheckFailedException bodies), so the client under test
-    * is a drop-in DynamoDB wire client.
-    */
-  private def withStatusServer(body: String => Unit): Unit = {
-    val gw = new graft.pipeline.DynamoGateway()
-    val base =
-      try gw.start()
-      catch {
-        case e: java.io.IOException =>
-          cancel(s"loopback bind unavailable: ${e.getMessage}")
-      }
-    try body(base) finally gw.stop()
-  }
-
   test("CAS contract: N racing None→IN_PROGRESS entries produce exactly one winner (both impls)") {
     val mem = new InMemoryStatusStore
     assert(raceEntry(Seq.fill(16)(mem), "c1", "CDI-db:coll") === 1)
@@ -70,91 +53,6 @@ class StatusStoreSpec extends SparkSpec {
     assert(raceEntry(stores, "c1", "CDI-db:coll") === 1)
     assert(stores.head.getStatus("c1", "CDI-db:coll") === Some(StatusStore.InProgress))
     Stage.deleteRecursively(dir)
-  }
-
-  test("CAS contract over REAL HTTP: 16 racing clients, one winner, server adjudicates") {
-    withStatusServer { base =>
-      // sixteen independent clients (sixteen drivers, separate
-      // connections) racing the same None→IN_PROGRESS entry — the
-      // service's atomic conditional put must admit exactly one
-      val clients = Seq.fill(16)(new HttpStatusStore(base))
-      assert(raceEntry(clients, "c1", "CDI-db:coll") === 1)
-      assert(clients.head.getStatus("c1", "CDI-db:coll") === Some(StatusStore.InProgress))
-      // and the full contract-harness leg the other impls run
-      val st = new HttpStatusStore(base)
-      assert(!st.compareAndSetStatus("c", "p", Some(StatusStore.Completed),
-        StatusStore.InProgress, "2021-06-15"))
-      assert(st.getStatus("c", "p") === None)
-      assert(st.compareAndSetStatus("c", "p", None, StatusStore.InProgress, "2021-06-15"))
-      assert(!st.compareAndSetStatus("c", "p", None, StatusStore.InProgress, "2021-06-15"))
-      assert(st.compareAndSetStatus("c", "p", Some(StatusStore.InProgress),
-        StatusStore.Completed, "2021-06-15", Map("S3_Prefix_CDI_Export" -> "/x")))
-      assert(st.getStatus("c", "p") === Some(StatusStore.Completed))
-      assert(st.getExtras("c", "p") === Map("S3_Prefix_CDI_Export" -> "/x"))
-    }
-  }
-
-  test("DynamoDB wire shape: GetItem/PutItem JSON, CCF body, and invocation-id replay never fails the winner") {
-    withStatusServer { base =>
-      val om = new com.fasterxml.jackson.databind.ObjectMapper()
-      val client = java.net.http.HttpClient.newHttpClient()
-      def post(op: String, json: String, invId: Option[String] = None)
-          : (Int, com.fasterxml.jackson.databind.JsonNode) = {
-        val b = java.net.http.HttpRequest.newBuilder()
-          .uri(java.net.URI.create(base + "/"))
-          .header("Content-Type", "application/x-amz-json-1.0")
-          .header("X-Amz-Target", s"DynamoDB_20120810.$op")
-          .POST(java.net.http.HttpRequest.BodyPublishers.ofString(json))
-        invId.foreach(b.header("amz-sdk-invocation-id", _))
-        val r = client.send(b.build(),
-          java.net.http.HttpResponse.BodyHandlers.ofString())
-        (r.statusCode(),
-          if (r.body().isEmpty) om.createObjectNode() else om.readTree(r.body()))
-      }
-      val key = """{"Correlation_Id":{"S":"w1"},"DataProduct":{"S":"CDI-d:c"}}"""
-      // missing row: GetItem answers 200 with NO Item member
-      val (gc, gb) = post("GetItem",
-        s"""{"TableName":"data_pipeline_metadata","Key":$key,"ConsistentRead":true}""")
-      assert(gc === 200 && gb.get("Item") == null)
-      // conditional create over the raw wire
-      val putBody =
-        s"""{"TableName":"data_pipeline_metadata",
-           |"Item":{"Correlation_Id":{"S":"w1"},"DataProduct":{"S":"CDI-d:c"},
-           |"Status":{"S":"IN_PROGRESS"},"Date":{"S":"2021-06-15"}},
-           |"ConditionExpression":"attribute_not_exists(Correlation_Id)"}""".stripMargin
-      val inv = java.util.UUID.randomUUID.toString
-      assert(post("PutItem", putBody, Some(inv))._1 === 200)
-      // the row reads back in DynamoDB attribute encoding
-      val (_, item) = post("GetItem",
-        s"""{"TableName":"data_pipeline_metadata","Key":$key}""")
-      assert(item.get("Item").get("Status").get("S").asText() === "IN_PROGRESS")
-      // a LOSING conditional put answers DynamoDB's exact error shape
-      val (lc, lb) = post("PutItem", putBody)
-      assert(lc === 400)
-      assert(lb.get("__type").asText() ===
-        "com.amazonaws.dynamodb.v20120810#ConditionalCheckFailedException")
-      // the lost-response hazard: the WINNER retries with the SAME
-      // amz-sdk-invocation-id and must be re-answered 200 (a replay),
-      // never told its own landed write failed the condition
-      assert(post("PutItem", putBody, Some(inv))._1 === 200)
-      // while a genuinely new invocation still loses
-      assert(post("PutItem", putBody,
-        Some(java.util.UUID.randomUUID.toString))._1 === 400)
-    }
-  }
-
-  test("HttpStatusStore: the Runner's double-enter guard holds across the service") {
-    withStatusServer { base =>
-      val store = new HttpStatusStore(base)
-      store.updateStatus("local", "CDI-db:coll", StatusStore.InProgress, "2021-06-15")
-      val e = intercept[IllegalStateException] {
-        new Runner(spark, store).runRange("/nonexistent", "2021-06-15", "2021-06-15",
-          "db", "coll", "/tmp/never_written_http")
-      }
-      assert(e.getMessage.contains("refusing to double-enter"))
-      assert(store.getStatus("local", "CDI-db:coll") === Some(StatusStore.InProgress))
-      assert(!new java.io.File("/tmp/never_written_http").exists())
-    }
   }
 
   test("CAS mismatch leaves the row untouched; matched transition lands and merges extras") {
@@ -233,83 +131,78 @@ class StatusStoreSpec extends SparkSpec {
     override def timing(n: String, v: Long, t: Map[String, String]): Unit = ()
   }
 
-  test("scanByStatus returns FAILED rows with exact keys and extras (all three impls)") {
-    withStatusServer { base =>
-      val impls: Seq[StatusStore] = Seq(
-        new InMemoryStatusStore,
-        new FileStatusStore(freshDir("scan")),
-        new HttpStatusStore(base))
-      impls.foreach { store =>
-        store.updateStatus("corr-1", "CDI-db:collA", StatusStore.Failed,
-          "2021-06-15", Map("S3_Prefix_CDI_Export" -> "/exports/a"))
-        store.updateStatus("corr-1", "CDI-db:collB", StatusStore.Completed, "2021-06-15")
-        store.updateStatus("corr-2", "CDI-db:collA", StatusStore.Failed, "2021-06-16")
-        val failed = store.scanByStatus(StatusStore.Failed)
-        assert(failed.map(r => (r.correlationId, r.dataProduct)).toSet ===
-          Set(("corr-1", "CDI-db:collA"), ("corr-2", "CDI-db:collA")),
-          s"impl ${store.getClass.getSimpleName}")
-        val a = failed.find(_.correlationId == "corr-1").get
-        assert(a.exportDate === "2021-06-15")
-        assert(a.extra.get("S3_Prefix_CDI_Export") === Some("/exports/a"))
-        assert(store.scanByStatus(StatusStore.InProgress).isEmpty)
-      }
+  test("scanByStatus returns FAILED rows with exact keys and extras (both impls)") {
+    Seq[StatusStore](new InMemoryStatusStore,
+        new FileStatusStore(freshDir("scan"))).foreach { store =>
+      store.updateStatus("corr-1", "CDI-db:collA", StatusStore.Failed,
+        "2021-06-15", Map("S3_Prefix_CDI_Export" -> "/exports/a"))
+      store.updateStatus("corr-1", "CDI-db:collB", StatusStore.Completed, "2021-06-15")
+      store.updateStatus("corr-2", "CDI-db:collA", StatusStore.Failed, "2021-06-16")
+      val failed = store.scanByStatus(StatusStore.Failed)
+      assert(failed.map(r => (r.correlationId, r.dataProduct)).toSet ===
+        Set(("corr-1", "CDI-db:collA"), ("corr-2", "CDI-db:collA")),
+        s"impl ${store.getClass.getSimpleName}")
+      val a = failed.find(_.correlationId == "corr-1").get
+      assert(a.exportDate === "2021-06-15")
+      assert(a.extra.get("S3_Prefix_CDI_Export") === Some("/exports/a"))
+      assert(store.scanByStatus(StatusStore.InProgress).isEmpty)
     }
   }
 
   test("relauncher race: two sweeps over one FAILED row elect exactly one winner; retry count moves once") {
-    withStatusServer { base =>
-      val seed = new HttpStatusStore(base)
-      seed.updateStatus("c1", "CDI-db:coll", StatusStore.Failed, "2021-06-15")
-      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val sink = new RecordingSink
-      // two independent wire clients, raced from the same scan state
-      val reports = {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val futs = (1 to 2).map { _ =>
-            pool.submit(new java.util.concurrent.Callable[graft.pipeline.Relauncher.Report] {
-              override def call() = {
-                val r = new graft.pipeline.Relauncher(
-                  new HttpStatusStore(base), maxRetryCount = 3, metrics = () => sink)
-                gate.await()
-                r.relaunch { _ => ran.incrementAndGet(); () }
-              }
-            })
-          }
-          gate.countDown()
-          futs.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
-        } finally pool.shutdownNow()
-      }
-      assert(ran.get() === 1, "exactly one sweep runs the re-submission")
-      assert(reports.map(_.relaunched.size).sum === 1)
-      assert(seed.getStatus("c1", "CDI-db:coll") === Some(StatusStore.Completed))
-      // the CAS carried the increment exactly once
-      assert(seed.getExtras("c1", "CDI-db:coll")
-        .get(graft.pipeline.Relauncher.RetryCountAttr) === Some("1"))
-      assert(sink.counters.count(_._1 == "relauncher.relaunch") === 1)
+    // two FileStatusStore instances over one directory: the
+    // two-drivers shape, with the CAS adjudicated across instances
+    val dir = freshDir("relaunch_race")
+    val seed = new FileStatusStore(dir)
+    seed.updateStatus("c1", "CDI-db:coll", StatusStore.Failed, "2021-06-15")
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val gate = new java.util.concurrent.CountDownLatch(1)
+    val sink = new RecordingSink
+    // two independent store instances, raced from the same scan state
+    val reports = {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      try {
+        val futs = (1 to 2).map { _ =>
+          pool.submit(new java.util.concurrent.Callable[graft.pipeline.Relauncher.Report] {
+            override def call() = {
+              val r = new graft.pipeline.Relauncher(
+                new FileStatusStore(dir), maxRetryCount = 3, metrics = () => sink)
+              gate.await()
+              r.relaunch { _ => ran.incrementAndGet(); () }
+            }
+          })
+        }
+        gate.countDown()
+        futs.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+      } finally pool.shutdownNow()
     }
+    assert(ran.get() === 1, "exactly one sweep runs the re-submission")
+    assert(reports.map(_.relaunched.size).sum === 1)
+    assert(seed.getStatus("c1", "CDI-db:coll") === Some(StatusStore.Completed))
+    // the CAS carried the increment exactly once
+    assert(seed.getExtras("c1", "CDI-db:coll")
+      .get(graft.pipeline.Relauncher.RetryCountAttr) === Some("1"))
+    assert(sink.counters.count(_._1 == "relauncher.relaunch") === 1)
+    Stage.deleteRecursively(dir)
   }
 
   test("relauncher exhaustion: a MAX_RETRY row stays FAILED, action never runs, terminal alert metric emitted") {
-    withStatusServer { base =>
-      val store = new HttpStatusStore(base)
-      store.updateStatus("c1", "CDI-db:coll", StatusStore.Failed, "2021-06-15",
-        Map(graft.pipeline.Relauncher.RetryCountAttr -> "2"))
-      val sink = new RecordingSink
-      val ran = new java.util.concurrent.atomic.AtomicInteger(0)
-      val report = new graft.pipeline.Relauncher(store, maxRetryCount = 2,
-        metrics = () => sink).relaunch(_ => { ran.incrementAndGet(); () })
-      assert(ran.get() === 0)
-      assert(report.exhausted === Seq(("c1", "CDI-db:coll")))
-      assert(store.getStatus("c1", "CDI-db:coll") === Some(StatusStore.Failed))
-      assert(store.getExtras("c1", "CDI-db:coll")
-        .get(graft.pipeline.Relauncher.RetryCountAttr) === Some("2"),
-        "an exhausted row's counter must not move")
-      val terminal = sink.counters.filter(_._1 == "relauncher.terminal")
-      assert(terminal.size === 1)
-      assert(terminal.head._3.get("data_product") === Some("CDI-db:coll"))
-    }
+    val store = new InMemoryStatusStore
+    store.updateStatus("c1", "CDI-db:coll", StatusStore.Failed, "2021-06-15",
+      Map(graft.pipeline.Relauncher.RetryCountAttr -> "2"))
+    val sink = new RecordingSink
+    val ran = new java.util.concurrent.atomic.AtomicInteger(0)
+    val report = new graft.pipeline.Relauncher(store, maxRetryCount = 2,
+      metrics = () => sink).relaunch(_ => { ran.incrementAndGet(); () })
+    assert(ran.get() === 0)
+    assert(report.exhausted === Seq(("c1", "CDI-db:coll")))
+    assert(store.getStatus("c1", "CDI-db:coll") === Some(StatusStore.Failed))
+    assert(store.getExtras("c1", "CDI-db:coll")
+      .get(graft.pipeline.Relauncher.RetryCountAttr) === Some("2"),
+      "an exhausted row's counter must not move")
+    val terminal = sink.counters.filter(_._1 == "relauncher.terminal")
+    assert(terminal.size === 1)
+    assert(terminal.head._3.get("data_product") === Some("CDI-db:coll"))
   }
 
   test("relauncher retry ladder: a persistently failing run walks FAILED→…→exhausted with exact counts") {
