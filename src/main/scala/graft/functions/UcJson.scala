@@ -244,19 +244,13 @@ object UcJson {
       .replace("_archived", "_removed")
 
   /** Collections the reference refuses to sanitise generically
-    * (data.py:167-177 raises NotImplementedError). Callers gate on this
-    * before the generic sanitise chain.
+    * (data.py:167-177 raises NotImplementedError). `Ingest.process`
+    * raises on these rows in the plan, ahead of the generic sanitise.
     */
   val requiresSpecificSanitising: Set[(String, String)] = Set(
     ("penalties-and-deductions", "sanction"),
     ("core", "healthAndDisabilityDeclaration"),
     ("accepted-data", "healthAndDisabilityCircumstances"))
-
-  def checkSanitisable(db: String, collection: String): Unit =
-    if (requiresSpecificSanitising((db, collection)))
-      throw new UnsupportedOperationException(
-        s"Collection $db:$collection requires specific sanitising which has " +
-          "not been implemented (mirrors reference NotImplementedError)")
 
   /** UCMessage.id (data.py:72-77): primitive ids pass through, object ids
     * render compact+sorted. Input is the raw `$.message._id` as text

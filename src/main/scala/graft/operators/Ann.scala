@@ -23,8 +23,8 @@ object Ann {
 
   private[graft] val NumQueries = 8
   private[graft] val TopK = 10
-  // L tables × H hyperplanes each: 4×6 → 64 buckets/table, candidates
-  // from any table agreeing on all 6 signs.
+  // s_maxsim's L=4 bucket tables; each table's hash width is
+  // corpus-scaled by lshHyperFor.
   private val Tables_ = 4
   // Round 16: s_ann_lsh runs L=8 independent tables (candidate UNION
   // across tables — the standard LSH recall lever; each extra table
@@ -35,7 +35,6 @@ object Ann {
   // volume ~1.9×. s_maxsim keeps L=4 (its per-token posting already
   // multiplies by DocToks).
   private val LshTables = 8
-  private val Hyper = 6
   private[operators] val Dim = 64
 
   /** Seeded deterministic hyperplane family: `tables` bucket tables ×
@@ -63,8 +62,6 @@ object Ann {
     })
 
   private val Pow2_60 = 1152921504606846976.0d // 2^60
-
-  private val planes = md5Hyperplanes(Tables_, Hyper, tag = "lsh")
 
   /** Corpus-scaled hash width for s_ann_lsh: buckets ≈ N/32 per table
     * (hyper = clamp(⌈log2 N⌉ − 5, 6, 20), occupancy ≈ 32) — the same
@@ -147,9 +144,6 @@ object Ann {
       .withColumnRenamed("pos", "t")
       .withColumnRenamed("col", "bucket")
   }
-
-  private def withBuckets(df: DataFrame, v: Column): DataFrame =
-    withBucketsFor(df, v, planes)
 
   /** D2: random-hyperplane LSH ANN — the scale path. Candidates come
     * from a shuffle join on (table, bucket); a 100 TB corpus never meets

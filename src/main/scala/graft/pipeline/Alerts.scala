@@ -40,13 +40,14 @@ object AlertRule {
 }
 
 object AlertRules {
-  /** The engine's standard alarm surface, mirroring the reference's:
-    * any verify failure, any relauncher retry exhaustion
-    * (emr-relauncher's SNS terminal alert), and pipeline liveness.
+  /** The engine's standard alarm surface: any verify failure
+    * (`verify.query_failures`, emitted by graft.Verify) and pipeline
+    * liveness (`pipeline.heartbeat`, emitted by `Runner.runRange` once
+    * per COMPLETED date). Every rule watches a metric the engine emits;
+    * PlanLintSpec checks that.
     */
   def standard(heartbeatWindowMillis: Long = 15 * 60 * 1000L): Seq[AlertRule] = Seq(
     AlertRule.Threshold("verify-failure", "verify.query_failures", 1.0),
-    AlertRule.Threshold("relauncher-terminal", "relauncher.terminal", 1.0),
     AlertRule.MissingHeartbeat("pipeline-heartbeat", "pipeline.heartbeat",
       heartbeatWindowMillis))
 }

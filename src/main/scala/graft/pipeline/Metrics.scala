@@ -20,10 +20,11 @@ package graft.pipeline
   * Bind points: [[MetricsSink.bindFromEnv]] reads SPARK_GRAFT_METRICS
   * (a filesystem path → [[JsonlMetricsSink]]; an http(s) URL →
   * [[HttpMetricsSink]]; unset → noop). graft.Verify binds it and
-  * emits per-query timings + a dump-count counter; graft.Main binds
-  * it for a job run, where [[Runner.runRange]] emits
-  * `pipeline.heartbeat` once per COMPLETED date (the metric
-  * [[AlertRules.standard]] alarms on when it goes silent);
+  * emits per-query timings, a dump-count counter and one
+  * `verify.query_failures` per failed query; graft.Main binds it for
+  * a job run, where [[Runner.runRange]] emits `pipeline.heartbeat`
+  * once per COMPLETED date. These two are the metrics
+  * [[AlertRules.standard]] alarms on (a failure, a silent heartbeat);
   * [[KeyService]] emits decrypt-call counts (the reference's dks_miss
   * — with the broadcast-join design every non-distinct record is by
   * construction a cache hit).

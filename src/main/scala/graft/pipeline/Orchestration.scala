@@ -22,19 +22,6 @@ final class SqlRunner(spark: SparkSession) {
   def createDatabaseIfNotExist(db: String): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $db")
 
-  /** SQL-scripting execution (BEGIN … END with DECLARE/SET/WHILE/IF —
-    * Spark 4's procedural surface): the control flow the reference
-    * runs OUTSIDE the engine (ingesters.py's python loops around
-    * per-statement hive calls) expressed inside one scripted
-    * submission, so a deployment can ship orchestration logic as SQL.
-    * Returns the script's final result set. Conf-scoped enable,
-    * restored after.
-    */
-  def executeScript(script: String): DataFrame =
-    graft.Stage.withConf(spark, "spark.sql.scripting.enabled" -> "true") {
-      spark.sql(script)
-    }
-
   /** Interpolate `#{key}` placeholders then execute (splitting on ';'
     * when the text holds multiple statements — hive.py:33-50).
     */
@@ -43,33 +30,24 @@ final class SqlRunner(spark: SparkSession) {
     if (content.count(_ == ';') > 1) executeQueries(content.split(";").toSeq)
     else spark.sql(content)
   }
-
-  /** File-based overload — the reference reads statement files off the
-    * image and interpolates before execution
-    * (hive.py:34-50 `execute_sql_statement_with_interpolation(file=…)`).
-    */
-  def executeFileWithInterpolation(file: String,
-      interpolation: Map[String, String] = Map.empty): Unit =
-    executeWithInterpolation(
-      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(file)),
-        java.nio.charset.StandardCharsets.UTF_8),
-      interpolation)
 }
 
 /** Run-status bookkeeping — the reference's DynamoDBHelper
   * (steps/dynamodb.py): one row per (correlation_id, data_product) with
   * IN_PROGRESS/COMPLETED/FAILED transitions, created on first write and
-  * updated in place afterwards. The store is pluggable (the deployment
-  * would back it with a KV service); the in-memory impl keeps the same
-  * create-then-update semantics and field shape for specs.
+  * updated in place afterwards. The engine ships one implementation,
+  * [[InMemoryStatusStore]], which `graft.Main` uses: its compare-and-set
+  * guard holds between drivers in one JVM. A deployment whose drivers
+  * share a status table implements this trait over that table's
+  * conditional write.
   */
 object StatusStore {
   val InProgress = "IN_PROGRESS"
   val Completed = "COMPLETED"
   val Failed = "FAILED"
 
-  /** One scanned row — the relauncher's working unit (the reference's
-    * DynamoDB table scan shape: key attributes + Status/Date + extras).
+  /** One scanned row (the reference's DynamoDB table scan shape: key
+    * attributes + Status/Date + extras).
     */
   final case class ScanRow(correlationId: String, dataProduct: String,
       status: String, exportDate: String, extra: Map[String, String])
@@ -99,11 +77,10 @@ trait StatusStore {
     */
   def getExtras(correlationId: String, dataProduct: String): Map[String, String] = Map.empty
 
-  /** All rows whose status equals `status` — the relauncher's scan
-    * (the reference's emr-relauncher scans the status table for FAILED
-    * runs). Bounded: status rows are per-(collection, correlation),
-    * not per-record, so a full scan is metadata-sized at any fleet
-    * scale.
+  /** All rows whose status equals `status` (the reference's status
+    * table scan). Bounded: status rows are per-(collection,
+    * correlation), not per-record, so a full scan is metadata-sized at
+    * any fleet scale.
     */
   def scanByStatus(status: String): Seq[StatusStore.ScanRow]
 }
@@ -154,127 +131,6 @@ final class InMemoryStatusStore extends StatusStore {
     }.toSeq
   }
 }
-
-/** File-backed StatusStore — the cross-DRIVER shape of the contract:
-  * two JVMs pointed at the same directory see each other's rows and
-  * their conditional writes adjudicate through an OS-level file lock
-  * (the sandbox stand-in for the KV service's conditional put; swap
-  * this class for the service-backed client at deploy time, the
-  * Runner never knows). One properties file per (correlation_id,
-  * data_product); every mutation is read-merge-write-rename under the
-  * store-wide lock file, so a torn row is impossible and CAS is
-  * linearizable across processes. Status rows are tiny and transitions
-  * are per-collection-per-date — a single lock file is nowhere near
-  * contention at any fleet size that shares one status root.
-  */
-final class FileStatusStore(dir: java.io.File) extends StatusStore {
-  import java.nio.file.{Files, Paths, StandardCopyOption}
-  dir.mkdirs()
-  private val lockFile = new java.io.File(dir, ".lock")
-
-  // JVM-level monitor + OS-level FileLock: FileLock alone throws on
-  // overlap WITHIN a JVM, the monitor alone is invisible ACROSS JVMs
-  private def locked[A](body: => A): A = FileStatusStore.synchronized {
-    val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
-      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-    try { val l = ch.lock(); try body finally l.release() } finally ch.close()
-  }
-
-  private def fileOf(correlationId: String, dataProduct: String): java.io.File = {
-    val safe = (correlationId + "__" + dataProduct).map {
-      case c if c.isLetterOrDigit || c == '-' || c == '_' => c
-      case _ => '+'
-    }
-    new java.io.File(dir, s"$safe.properties")
-  }
-
-  private def read(f: java.io.File): Option[java.util.Properties] =
-    if (!f.exists()) None
-    else {
-      val p = new java.util.Properties()
-      val in = Files.newInputStream(f.toPath)
-      try p.load(in) finally in.close()
-      Some(p)
-    }
-
-  private def write(f: java.io.File, p: java.util.Properties): Unit = {
-    val tmp = new java.io.File(dir, f.getName + ".tmp")
-    val out = Files.newOutputStream(tmp.toPath)
-    try p.store(out, null) finally out.close()
-    Files.move(tmp.toPath, f.toPath, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
-
-  private def merged(f: java.io.File, correlationId: String, dataProduct: String,
-      status: String, exportDate: String,
-      extra: Map[String, String]): java.util.Properties = {
-    val p = read(f).getOrElse {
-      val fresh = new java.util.Properties()
-      fresh.setProperty("exportDate", exportDate)
-      fresh
-    }
-    // the UNsanitized key rides inside the row (file names are lossy),
-    // so scanByStatus can recover it exactly
-    p.setProperty("correlationId", correlationId)
-    p.setProperty("dataProduct", dataProduct)
-    p.setProperty("status", status)
-    extra.foreach { case (k, v) => p.setProperty(s"extra.$k", v) }
-    p
-  }
-
-  override def getStatus(correlationId: String, dataProduct: String): Option[String] =
-    locked {
-      read(fileOf(correlationId, dataProduct)).flatMap(p => Option(p.getProperty("status")))
-        .filter(Set(StatusStore.InProgress, StatusStore.Completed, StatusStore.Failed))
-    }
-
-  override def updateStatus(correlationId: String, dataProduct: String, status: String,
-      exportDate: String, extra: Map[String, String] = Map.empty): Unit = locked {
-    val f = fileOf(correlationId, dataProduct)
-    write(f, merged(f, correlationId, dataProduct, status, exportDate, extra))
-  }
-
-  override def getExtras(correlationId: String, dataProduct: String): Map[String, String] =
-    locked {
-      read(fileOf(correlationId, dataProduct)).map { p =>
-        import scala.jdk.CollectionConverters._
-        p.stringPropertyNames().asScala.filter(_.startsWith("extra."))
-          .map(k => k.stripPrefix("extra.") -> p.getProperty(k)).toMap
-      }.getOrElse(Map.empty)
-    }
-
-  override def compareAndSetStatus(correlationId: String, dataProduct: String,
-      expected: Option[String], status: String, exportDate: String,
-      extra: Map[String, String] = Map.empty): Boolean = locked {
-    val f = fileOf(correlationId, dataProduct)
-    val cur = read(f).flatMap(p => Option(p.getProperty("status")))
-    if (cur != expected) false
-    else { write(f, merged(f, correlationId, dataProduct, status, exportDate, extra)); true }
-  }
-
-  override def scanByStatus(status: String): Seq[StatusStore.ScanRow] = locked {
-    import scala.jdk.CollectionConverters._
-    Option(dir.listFiles()).getOrElse(Array.empty).toSeq
-      .filter(_.getName.endsWith(".properties")).sortBy(_.getName)
-      .flatMap(read)
-      .filter(p => p.getProperty("status") == status)
-      .flatMap { p =>
-        // rows written before the key attributes rode inside the file
-        // are unscannable (file names are lossy) — skip, don't guess
-        (Option(p.getProperty("correlationId")), Option(p.getProperty("dataProduct"))) match {
-          case (Some(cid), Some(dp)) =>
-            Some(StatusStore.ScanRow(cid, dp, status,
-              Option(p.getProperty("exportDate")).getOrElse(""),
-              p.stringPropertyNames().asScala.filter(_.startsWith("extra."))
-                .map(k => k.stripPrefix("extra.") -> p.getProperty(k)).toMap))
-          case _ => None
-        }
-      }
-  }
-}
-
-object FileStatusStore
 
 /** The reference's driver loop (corporate_data_ingestion.py:80-117):
   * iterate the export-date range; per date mark IN_PROGRESS, read the
@@ -366,7 +222,9 @@ final class Runner(
     * that export, keep one record per (id_part, id) — DELETE outranks
     * INSERT, the reference's `row_number over orderBy("db_type")` asc —
     * and write the new export partitioned by id_part, recording its
-    * prefix+date in the status extras for the next run.
+    * prefix+date in the status extras for the next run only once the
+    * export is written: a failed or partial write leaves the extras on
+    * the previous export, so a rerun of the date starts from it.
     */
   def update(outRoot: String, exportDate: String, db: String, collection: String): Unit = {
     val dataProduct = s"CDI-$db:$collection"
@@ -374,8 +232,6 @@ final class Runner(
     val prevPrefix = extras.get("S3_Prefix_CDI_Export")
     val prevDate = extras.get("CDI_Export_Date")
     val newPrefix = exportPrefix(outRoot, db, collection, exportDate)
-    status.updateStatus(correlationId, dataProduct, StatusStore.InProgress, exportDate,
-      Map("S3_Prefix_CDI_Export" -> newPrefix, "CDI_Export_Date" -> exportDate))
     val outCols = Seq("id", "db_type", "val", "id_part")
     val dailiesAll = spark.read.parquet(outRoot)
     val dailies = prevDate.fold(dailiesAll) { prev =>
@@ -391,6 +247,8 @@ final class Runner(
     val merged = Snapshot.merge(export, dailies, Seq("id_part", "id"),
       when(col("db_type") === "DELETE", 1).otherwise(0))
     Snapshot.writeSnapshot(merged.select(outCols.map(col): _*), newPrefix)
+    status.updateStatus(correlationId, dataProduct, StatusStore.InProgress, exportDate,
+      Map("S3_Prefix_CDI_Export" -> newPrefix, "CDI_Export_Date" -> exportDate))
   }
 
   /** Staging publication (ingesters.py:283-339): drop and re-publish
@@ -411,103 +269,6 @@ final class Runner(
     // the staging table is ORC like the export it publishes — the
     // reference's Hive staging format (ingesters.py:283-339)
     spark.read.orc(prefix).write.format("orc").saveAsTable(table)
-  }
-}
-
-object Relauncher {
-  /** Attribute carrying the per-row retry count (the reference's
-    * relauncher reads/writes a retry counter against
-    * MAX_RETRY_COUNT before re-submitting a cluster).
-    */
-  val RetryCountAttr = "Retry_Count"
-
-  /** One sweep's accounting, per (correlationId, dataProduct). */
-  final case class Report(
-      relaunched: Seq[(String, String)],
-      recovered: Seq[(String, String)],
-      failedAgain: Seq[(String, String)],
-      lostRace: Seq[(String, String)],
-      exhausted: Seq[(String, String)])
-}
-
-/** Failure-retry relauncher — the reference's emr-relauncher
-  * (emr-relauncher.tf:26-33 + its lambda's dynamodb status scan):
-  * sweep the status store for FAILED rows and re-enter each with
-  * bounded retries. Safe to run from many schedulers at once: the
-  * re-entry is the SAME conditional write the Runner uses
-  * (FAILED → IN_PROGRESS CAS), adjudicated server-side, so two racing
-  * relaunchers elect exactly one winner per row — the loser sees the
-  * row already flipped and walks away. The winner's CAS also carries
-  * the incremented retry count, so the counter moves exactly once per
-  * re-entry no matter how many sweepers race.
-  *
-  * A row whose retry count has reached `maxRetryCount` is TERMINAL:
-  * it stays FAILED, the action is never invoked, and a
-  * `relauncher.terminal` counter goes to the [[MetricsSink]] (the
-  * reference's SNS alarm topic stand-in — [[AlertRules.standard]]
-  * turns it into a deduplicated alert). Each successful re-entry
-  * emits `relauncher.relaunch`; an action that fails again emits
-  * `relauncher.failed` and re-marks FAILED for the next sweep.
-  */
-final class Relauncher(
-    status: StatusStore,
-    maxRetryCount: Int = 3,
-    metrics: () => MetricsSink = () => MetricsSink.global) {
-  import Relauncher._
-
-  private def tags(row: StatusStore.ScanRow): Map[String, String] =
-    Map("correlation_id" -> row.correlationId, "data_product" -> row.dataProduct)
-
-  /** One sweep. `run` is the re-submission (re-running the Runner's
-    * date, re-launching the cluster); it executes only for rows this
-    * sweeper's CAS won.
-    */
-  def relaunch(run: StatusStore.ScanRow => Unit): Report = {
-    val relaunched = Seq.newBuilder[(String, String)]
-    val recovered = Seq.newBuilder[(String, String)]
-    val failedAgain = Seq.newBuilder[(String, String)]
-    val lostRace = Seq.newBuilder[(String, String)]
-    val exhausted = Seq.newBuilder[(String, String)]
-    status.scanByStatus(StatusStore.Failed).foreach { row =>
-      val key = (row.correlationId, row.dataProduct)
-      val retries = row.extra.get(RetryCountAttr)
-        .flatMap(_.toIntOption).getOrElse(0)
-      if (retries >= maxRetryCount) {
-        metrics().counter("relauncher.terminal", 1,
-          tags(row) + ("retries" -> retries.toString))
-        exhausted += key
-      } else {
-        val entered = status.compareAndSetStatus(
-          row.correlationId, row.dataProduct,
-          Some(StatusStore.Failed), StatusStore.InProgress, row.exportDate,
-          Map(RetryCountAttr -> (retries + 1).toString))
-        if (!entered) lostRace += key
-        else {
-          metrics().counter("relauncher.relaunch", 1,
-            tags(row) + ("attempt" -> (retries + 1).toString))
-          relaunched += key
-          try {
-            run(row.copy(status = StatusStore.InProgress,
-              extra = row.extra + (RetryCountAttr -> (retries + 1).toString)))
-            status.updateStatus(row.correlationId, row.dataProduct,
-              StatusStore.Completed, row.exportDate)
-            recovered += key
-          } catch {
-            case e: Exception =>
-              // FAILED again — the NEXT sweep retries (or exhausts);
-              // the sweep itself never dies to one bad row
-              metrics().counter("relauncher.failed", 1, tags(row))
-              System.err.println(
-                s"[relauncher] ${row.dataProduct} failed again: ${e.getMessage}")
-              status.updateStatus(row.correlationId, row.dataProduct,
-                StatusStore.Failed, row.exportDate)
-              failedAgain += key
-          }
-        }
-      }
-    }
-    Report(relaunched.result(), recovered.result(), failedAgain.result(),
-      lostRace.result(), exhausted.result())
   }
 }
 

@@ -165,26 +165,22 @@ class MetricsSpec extends SparkSpec {
     assert(sink.fired.count(_.rule == "hb") === 2)
   }
 
-  test("alert chain end-to-end: relauncher exhaustion → standard rules → one deduped alert riding the downstream sink") {
+  test("alert chain end-to-end: verify failures → standard rules → one deduped alert riding the downstream sink") {
     import graft.pipeline._
     val f = java.io.File.createTempFile("graft_alerts", ".jsonl")
     f.delete()
     val downstream = new JsonlMetricsSink(f.getPath)
     val alerting = new AlertingSink(AlertRules.standard(), downstream)
-    val store = new InMemoryStatusStore
-    store.updateStatus("c1", "CDI-db:coll", StatusStore.Failed, "2021-06-15",
-      Map(Relauncher.RetryCountAttr -> "3"))
-    val rl = new Relauncher(store, maxRetryCount = 3, metrics = () => alerting)
-    rl.relaunch(_ => fail("exhausted row must never re-run"))
-    rl.relaunch(_ => fail("exhausted row must never re-run"))
-    // two sweeps emitted two terminal counters — ONE alert episode
-    assert(alerting.fired.map(_.rule) === Seq("relauncher-terminal"))
+    alerting.counter("verify.query_failures", 1, Map("query" -> "q_a"))
+    alerting.counter("verify.query_failures", 1, Map("query" -> "q_b"))
+    // two failure counters — ONE alert episode
+    assert(alerting.fired.map(_.rule) === Seq("verify-failure"))
     val lines = readLines(f)
-    assert(lines.count(_.get("name").asText() == "relauncher.terminal") === 2,
+    assert(lines.count(_.get("name").asText() == "verify.query_failures") === 2,
       "raw counters pass through unchanged")
     val fired = lines.filter(_.get("name").asText() == "alert.fired")
     assert(fired.size === 1)
-    assert(fired.head.get("tags").get("rule").asText() === "relauncher-terminal")
+    assert(fired.head.get("tags").get("rule").asText() === "verify-failure")
     f.delete()
   }
 }

@@ -15,17 +15,29 @@ class OrchestrationSpec extends SparkSpec {
   /** Write envelope fixtures into the corporate_storage layout for the
     * data date PRECEDING each export date.
     */
-  private def layoutFixtures(root: String, exportDates: Seq[String]): Unit =
+  private def layoutFixtures(root: String, exportDates: Seq[String],
+      db: String = "corp"): Unit =
     exportDates.foreach { ed =>
       val prev = java.time.LocalDate.parse(ed).minusDays(1)
-      val dir = f"$root/${prev.getYear}%04d/${prev.getMonthValue}%02d/${prev.getDayOfMonth}%02d/corp/documents"
+      val dir = f"$root/${prev.getYear}%04d/${prev.getMonthValue}%02d/${prev.getDayOfMonth}%02d/$db/documents"
       Envelope.synthesize(spark, sfDir).write.mode("overwrite").text(dir)
     }
+
+  /** Drop `db` and any warehouse directory an earlier JVM left behind:
+    * saveAsTable refuses a managed location that already exists.
+    */
+  private def freshDatabase(db: String): Unit = {
+    spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
+    val leftover = new java.io.File(
+      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:") + s"/$db.db")
+    if (leftover.exists()) Stage.deleteRecursively(leftover)
+  }
 
   test("runRange processes each date, tracks IN_PROGRESS→COMPLETED, writes daily layout") {
     val root = Files.createTempDirectory("graft_corp").toString
     val out = Files.createTempDirectory("graft_daily_out").toString
-    layoutFixtures(root, Seq("2021-06-15", "2021-06-16"))
+    layoutFixtures(root, Seq("2021-06-15", "2021-06-16"), db = "corp_range")
+    freshDatabase("corp_range_staging")
 
     val store = new InMemoryStatusStore
     // record the global sink's heartbeats for the run, then restore it
@@ -37,26 +49,83 @@ class OrchestrationSpec extends SparkSpec {
       override def gauge(n: String, v: Double, t: Map[String, String]): Unit = ()
       override def timing(n: String, v: Long, t: Map[String, String]): Unit = ()
     }
-    try new Runner(spark, store).runRange(root, "2021-06-15", "2021-06-16",
-      "corp", "documents", out)
+    try new Runner(spark, store, forceCollectionUpdate = true).runRange(root,
+      "2021-06-15", "2021-06-16", "corp_range", "documents", out)
     finally MetricsSink.global = prev
 
-    assert(store.getStatus("local", "CDI-corp:documents") === Some(StatusStore.Completed))
+    val dp = "CDI-corp_range:documents"
+    assert(store.getStatus("local", dp) === Some(StatusStore.Completed))
     // one heartbeat per COMPLETED date: the metric AlertRules.standard watches
     assert(beats.toSeq === Seq(
-      Map("db" -> "corp", "collection" -> "documents", "export_date" -> "2021-06-15"),
-      Map("db" -> "corp", "collection" -> "documents", "export_date" -> "2021-06-16")))
-    assert(store.history.toSeq === Seq(
-      ("CDI-corp:documents", "2021-06-15", StatusStore.InProgress),
-      ("CDI-corp:documents", "2021-06-15", StatusStore.Completed),
-      ("CDI-corp:documents", "2021-06-16", StatusStore.InProgress),
-      ("CDI-corp:documents", "2021-06-16", StatusStore.Completed)))
+      Map("db" -> "corp_range", "collection" -> "documents", "export_date" -> "2021-06-15"),
+      Map("db" -> "corp_range", "collection" -> "documents", "export_date" -> "2021-06-16")))
+    // per date: the entry CAS, update's extras write, then COMPLETED
+    assert(store.history.toSeq === Seq("2021-06-15", "2021-06-16").flatMap(d => Seq(
+      (dp, d, StatusStore.InProgress),
+      (dp, d, StatusStore.InProgress),
+      (dp, d, StatusStore.Completed))))
 
     // dynamic-partition layout holds both dates
     val back = spark.read.parquet(out)
     val days = back.select("export_day").distinct().collect().map(_.getInt(0)).toSet
     assert(days === Set(15, 16))
     assert(back.count() === Tables.documents(spark, sfDir).count() * 2)
+
+    // update: the extras name the last date's export, which holds one
+    // row per id; exportToHive: the staging table is that export
+    val extras = store.getExtras("local", dp)
+    assert(extras === Map(
+      "S3_Prefix_CDI_Export" -> s"$out/_exports/corp_range/documents/2021-06-16",
+      "CDI_Export_Date" -> "2021-06-16"))
+    val snapshot = spark.read.orc(extras("S3_Prefix_CDI_Export"))
+    assert(snapshot.count() === Tables.documents(spark, sfDir).count())
+    assert(snapshot.select("id_part", "id").distinct().count() === snapshot.count())
+    val staging = spark.table("corp_range_staging.src_documents")
+      .select(snapshot.columns.map(col): _*)
+    assert(staging.exceptAll(snapshot).isEmpty && snapshot.exceptAll(staging).isEmpty)
+    spark.sql("DROP DATABASE IF EXISTS corp_range_staging CASCADE")
+  }
+
+  test("a failed update keeps the previous export in the status extras, so a rerun recovers") {
+    val root = Files.createTempDirectory("graft_corp_wedge").toString
+    layoutFixtures(root, Seq("2021-06-15", "2021-06-16"), db = "corp_wedge")
+    freshDatabase("corp_wedge_staging")
+    val dp = "CDI-corp_wedge:documents"
+    def run(store: StatusStore, out: String, start: String, end: String): Unit =
+      new Runner(spark, store, forceCollectionUpdate = true)
+        .runRange(root, start, end, "corp_wedge", "documents", out)
+
+    val cleanOut = Files.createTempDirectory("graft_wedge_clean").toString
+    val cleanStore = new InMemoryStatusStore
+    run(cleanStore, cleanOut, "2021-06-15", "2021-06-16")
+    val clean = spark.read.orc(cleanStore.getExtras("local", dp)("S3_Prefix_CDI_Export"))
+
+    val out = Files.createTempDirectory("graft_wedge_out").toString
+    val store = new InMemoryStatusStore
+    run(store, out, "2021-06-15", "2021-06-15")
+    val export15 = s"$out/_exports/corp_wedge/documents/2021-06-15"
+    val after15 = Map("S3_Prefix_CDI_Export" -> export15, "CDI_Export_Date" -> "2021-06-15")
+    assert(store.getExtras("local", dp) === after15)
+
+    // the 06-15 export vanishes: the 06-16 update fails on reading it
+    // and must leave the extras naming the export it could not replace
+    val hidden = Files.createTempDirectory("graft_wedge_hidden").resolve("export")
+    Files.move(java.nio.file.Paths.get(export15), hidden)
+    intercept[Exception] { run(store, out, "2021-06-16", "2021-06-16") }
+    assert(store.getStatus("local", dp) === Some(StatusStore.Failed))
+    assert(store.getExtras("local", dp) === after15)
+
+    // restored, the rerun succeeds and equals the clean two-date run
+    Files.move(hidden, java.nio.file.Paths.get(export15))
+    run(store, out, "2021-06-16", "2021-06-16")
+    assert(store.getStatus("local", dp) === Some(StatusStore.Completed))
+    val extras = store.getExtras("local", dp)
+    assert(extras === Map(
+      "S3_Prefix_CDI_Export" -> s"$out/_exports/corp_wedge/documents/2021-06-16",
+      "CDI_Export_Date" -> "2021-06-16"))
+    val rerun = spark.read.orc(extras("S3_Prefix_CDI_Export"))
+    assert(rerun.exceptAll(clean).isEmpty && clean.exceptAll(rerun).isEmpty)
+    spark.sql("DROP DATABASE IF EXISTS corp_wedge_staging CASCADE")
   }
 
   test("Main CLI path runs a 2-date range end-to-end with reference flag names") {
@@ -130,13 +199,11 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("SqlRunner executes a statement file with interpolation") {
-    val f = Files.createTempFile("graft_sql", ".sql")
-    Files.write(f,
+    new SqlRunner(spark).executeWithInterpolation(
       """CREATE DATABASE IF NOT EXISTS sql_file_spec;
         |DROP TABLE IF EXISTS sql_file_spec.t1;
         |CREATE TABLE sql_file_spec.t1 USING PARQUET AS SELECT #{n} AS n;
-        |""".stripMargin.getBytes)
-    new SqlRunner(spark).executeFileWithInterpolation(f.toString, Map("#{n}" -> "7"))
+        |""".stripMargin, Map("#{n}" -> "7"))
     assert(spark.table("sql_file_spec.t1").collect().map(_.getInt(0)).toSeq === Seq(7))
     spark.sql("DROP DATABASE IF EXISTS sql_file_spec CASCADE")
   }
@@ -169,12 +236,7 @@ class OrchestrationSpec extends SparkSpec {
   }
 
   test("audit publish: external-over-text → INSERT OVERWRITE managed raw → drop") {
-    // fresh session + leftover warehouse dir from a prior JVM → clean both
-    spark.sql("DROP DATABASE IF EXISTS uc_dw_auditlog_test CASCADE")
-    val leftover = new java.io.File(
-      spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-        + "/uc_dw_auditlog_test.db")
-    if (leftover.exists()) graft.Stage.deleteRecursively(leftover)
+    freshDatabase("uc_dw_auditlog_test")
     val daily = Files.createTempDirectory("graft_audit_daily").toString
     val processed = Ingest.pipeline(Envelope.synthesizeAudit(spark, sfDir))
     AuditPublish.writeAuditDaily(processed, daily)
@@ -208,35 +270,6 @@ class OrchestrationSpec extends SparkSpec {
     AuditPublish.publishViews(spark, "uc_dw_auditlog_test", "2021-06-15",
       ddl, secCols, redCols)
     assert(spark.table("uc_dw_auditlog_test.auditlog_sec_v").count() === processed.count())
-  }
-
-  test("SqlRunner.executeScript: procedural SQL control flow equals the set-based answer") {
-    // the reference drives per-class work with PYTHON loops around
-    // hive calls; SQL scripting moves that control flow into the
-    // engine. A WHILE loop accumulating per-priority-class counts
-    // must equal the one-shot aggregate exactly.
-    Tables.orders(spark, sfDir).createOrReplaceTempView("script_orders")
-    val confBefore = spark.conf.getOption("spark.sql.scripting.enabled")
-    val got = new SqlRunner(spark).executeScript(
-      """BEGIN
-        |  DECLARE i INT = 1;
-        |  DECLARE total BIGINT = 0;
-        |  WHILE i <= 5 DO
-        |    SET total = total + (
-        |      SELECT COUNT(*) FROM script_orders
-        |      WHERE o_orderpriority LIKE CAST(i AS STRING) || '-%');
-        |    SET i = i + 1;
-        |  END WHILE;
-        |  SELECT total AS n;
-        |END""".stripMargin).head.getLong(0)
-    val direct = Tables.orders(spark, sfDir)
-      .filter(col("o_orderpriority").rlike("^[1-5]-")).count()
-    assert(got === direct)
-    assert(got > 0)
-    // the conf scope was restored to whatever it was before the call
-    // (scripting defaults ON in this Spark line — the scope exists for
-    // deployments that pin it off)
-    assert(spark.conf.getOption("spark.sql.scripting.enabled") === confBefore)
   }
 
   test("reference Hive DDL dialect (STORED AS ORC + external TEXTFILE + partition DDL) in a Hive-catalog JVM") {

@@ -204,4 +204,17 @@ class PlanLintSpec extends SparkSpec {
     }
     assert(hits.isEmpty, hits.mkString("loopback servers in product code:\n", "\n", ""))
   }
+
+  /** An alarm on a metric nothing emits can never fire: every rule in
+    * `AlertRules.standard` must watch a metric some product file other
+    * than Alerts.scala emits as a literal name.
+    */
+  test("alarm lint: every standard alert rule watches a metric product code emits") {
+    val emitters = productSources.filter(_._1 != "pipeline/Alerts.scala")
+    val silent = graft.pipeline.AlertRules.standard().map(_.metric).distinct.filterNot { m =>
+      val call = ("\\.(counter|gauge|timing)\\(\\s*\"" + java.util.regex.Pattern.quote(m) + "\"").r
+      emitters.exists { case (_, src) => call.findFirstIn(src).nonEmpty }
+    }
+    assert(silent.isEmpty, silent.mkString("alert rules on metrics nothing emits: ", ", ", ""))
+  }
 }

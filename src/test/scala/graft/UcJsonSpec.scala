@@ -321,10 +321,17 @@ class UcJsonSpec extends AnyFunSuite {
   }
 
   test("collection-specific sanitise guard raises (data.py:167-177)") {
-    intercept[UnsupportedOperationException] {
-      UcJson.checkSanitisable("penalties-and-deductions", "sanction")
-    }
-    UcJson.checkSanitisable("some", "collection") // no-op
+    // the guard the job runs: Ingest.process raises in the plan, on action
+    val spark = SparkSpec.session
+    import spark.implicits._
+    def processed(db: String, collection: String) = graft.pipeline.Ingest.process(
+      Seq((db, collection, "1", """{"_id":"1","field":"v"}""", ""))
+        .toDF("db", "collection", "raw_id", "decrypted", "envelope_lm"))
+    val guarded = processed("penalties-and-deductions", "sanction")
+    val e = intercept[Exception] { guarded.select("val").collect() }
+    assert(e.getMessage.contains(
+      "Collection penalties-and-deductions:sanction requires specific sanitising"), e.getMessage)
+    assert(processed("some", "collection").select("val").collect().length === 1)
   }
 
   // ---- id helpers (UCMessage.id, ingesters.py to_row) ----
