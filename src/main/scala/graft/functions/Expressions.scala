@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * generated loop over the scan.
   *
   * Reference semantics: steps/dks.py:125-134 (AES-CTR),
-  * steps/data.py:63-273 (UCMessage validate/transform/id).
+  * steps/data.py:63-273 (UCMessage validate/transform/sanitise/id).
   */
 
 /** base64 ciphertext × base64 key × base64 iv → utf8 plaintext. */
@@ -78,6 +78,22 @@ case class UcTransformAudit(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** UCMessage.sanitise (data.py:150-161): the [[UcJson.sanitise]]
+  * find/replace chain in one call.
+  */
+case class UcSanitise(child: Expression)
+    extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "uc_sanitise"
+  protected override def nullSafeEval(input: Any): Any =
+    UcJsonCodegen.sanitise(input.asInstanceOf[UTF8String])
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, c => s"graft.functions.UcJsonCodegen.sanitise($c)")
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
 }
 
 /** python json.dumps(..., sort_keys=True, separators=(',',':'),

@@ -13,6 +13,8 @@ object UcJsonCodegen {
   }
   def transformAudit(s: UTF8String, lm: UTF8String): UTF8String =
     UTF8String.fromString(UcJson.transformAudit(s.toString, lm.toString))
+  def sanitise(s: UTF8String): UTF8String =
+    UTF8String.fromString(UcJson.sanitise(s.toString))
   def canonicalize(s: UTF8String): UTF8String =
     UTF8String.fromString(UcJson.canonicalize(s.toString))
   def canonicalId(s: UTF8String): UTF8String =

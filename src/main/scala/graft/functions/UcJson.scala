@@ -232,9 +232,8 @@ object UcJson {
 
   /** UCMessage.sanitise (data.py:150-161): dumb find/replace on the
     * serialized record. NB `\\u0000` is the 6-char escape sequence (the
-    * serialized form of a NUL char), not the NUL char itself. The column
-    * version in graft.functions.uc_sanitise composes the same chain from
-    * built-in replace() calls; this pure form backs the parity spec.
+    * serialized form of a NUL char), not the NUL char itself. The
+    * `uc_sanitise` column ([[UcSanitise]]) calls this.
     */
   def sanitise(serialized: String): String =
     serialized

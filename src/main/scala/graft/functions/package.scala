@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftx.ColumnBridge.{column => toCol, expression => toExpr}
 
 /** Public column-builder surface for graft's custom expressions, mirroring
@@ -28,16 +27,12 @@ package object functions {
     toCol(UcTransformAudit(toExpr(decrypted), toExpr(envelopeLastModified)))
 
   /** UCMessage.sanitise (data.py:150-161): dumb find/replace on the
-    * serialized record — composed from built-in (codegen'd) functions.
+    * serialized record ([[UcJson.sanitise]]).
     * NB the $→d_ pass intentionally rewrites the "$date"/"$oid" wrappers
     * to "d_date"/"d_oid" (see reference docs/message-transformation.md).
     */
-  def uc_sanitise(json: Column): Column = {
-    val s1 = replace(json, lit("$"), lit("d_"))
-    val s2 = replace(s1, lit("\\u0000"), lit(""))
-    val s3 = replace(s2, lit("_archivedDateTime"), lit("_removedDateTime"))
-    replace(s3, lit("_archived"), lit("_removed"))
-  }
+  def uc_sanitise(json: Column): Column =
+    toCol(UcSanitise(toExpr(json)))
 
   /** Final output form: compact, sorted keys, non-ascii raw
     * (UCMessage.utf8_decrypted_record).

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.fs.NioLocalFileSystem
 import graft.functions._
 
 /** The CDI decrypt→normalize→derive pipeline as one declarative column
@@ -128,7 +129,8 @@ object Ingest {
     * contiguous key range, sort within partitions, dynamic partition
     * overwrite on (export_year, export_month, export_day, id_part).
     * Default parquet+zstd; pass ("orc", "zlib") for the reference's
-    * exact storage format — the layout contract is identical.
+    * exact storage format — the layout contract is identical. Local
+    * paths write through [[NioLocalFileSystem]].
     */
   def writeDaily(daily: DataFrame, path: String,
       format: String = "parquet", compression: String = "zstd"): Unit =
@@ -136,6 +138,7 @@ object Ingest {
       .repartitionByRange(col("id_part"), col("id"))
       .sortWithinPartitions("id")
       .write
+      .options(NioLocalFileSystem.writeOptions)
       .option("partitionOverwriteMode", "dynamic")
       .option("compression", compression)
       .partitionBy("export_year", "export_month", "export_day", "id_part")

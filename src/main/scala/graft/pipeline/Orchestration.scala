@@ -2,8 +2,12 @@ package graft.pipeline
 
 import scala.collection.mutable
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
+
+import graft.fs.NioLocalFileSystem
 
 /** SQL orchestration — the reference's HiveService (steps/hive.py):
   * skip-blank query execution, CREATE DATABASE IF NOT EXISTS, and
@@ -262,10 +266,19 @@ final class Runner(
     val prefix = status.getExtras(correlationId, dataProduct)
       .getOrElse("S3_Prefix_CDI_Export", exportPrefix(outRoot, db, collection, exportDate))
     val stagingDb = s"${db}_staging"
-    val table = s"$stagingDb.src_${collection.toLowerCase}"
+    val name = TableIdentifier(s"src_${collection.toLowerCase}", Some(stagingDb))
+    val table = name.unquotedString
     val sql = new SqlRunner(spark)
     sql.createDatabaseIfNotExist(stagingDb)
-    sql.executeQueries(Seq(s"DROP TABLE IF EXISTS $table"))
+    if (spark.catalog.tableExists(table)) sql.executeQueries(Seq(s"DROP TABLE $table"))
+    else {
+      // a catalog that never saw the table (a new JVM over the same
+      // warehouse) cannot drop it, but its managed directory may still
+      // be on disk, and saveAsTable refuses to write over it: remove
+      // what the drop would have removed
+      val location = new Path(spark.sessionState.catalog.defaultTablePath(name))
+      location.getFileSystem(spark.sessionState.newHadoopConf()).delete(location, true)
+    }
     // the staging table is ORC like the export it publishes — the
     // reference's Hive staging format (ingesters.py:283-339)
     spark.read.orc(prefix).write.format("orc").saveAsTable(table)
@@ -280,7 +293,8 @@ final class Runner(
   */
 object AuditPublish {
   def writeAuditDaily(processed: DataFrame, path: String): Unit =
-    processed.select(col("val")).write.mode("overwrite").text(path)
+    processed.select(col("val")).write.options(NioLocalFileSystem.writeOptions)
+      .mode("overwrite").text(path)
 
   /** Which catalog the session runs — the reference's EMR sessions are
     * Hive-catalog (`STORED AS` DDL); local test sessions default to

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.fs.NioLocalFileSystem
+
 /** Latest-record snapshot logic (reference: steps/ingesters.py:341-460).
   *
   * The reference keeps one latest record per (id_part, id) with
@@ -67,12 +69,14 @@ object Snapshot {
     * 4096) — written partitioned by id_part so downstream reads prune.
     * Default format is ORC+zlib, the reference's exact snapshot/export
     * storage (ingesters.py:341-460); read back with `spark.read.orc`.
+    * Local paths write through [[NioLocalFileSystem]].
     */
   def writeSnapshot(snapshot: DataFrame, path: String,
       format: String = "orc", compression: String = "zlib"): Unit =
     snapshot
       .repartitionByRange(col("id_part"), col("id"))
       .write
+      .options(NioLocalFileSystem.writeOptions)
       .partitionBy("id_part")
       .option("compression", compression)
       .mode("overwrite")

@@ -217,8 +217,8 @@ object PipelineQueries {
        |  $OracleLmZ AS lm
        |FROM documents""".stripMargin
 
-  /** B4: sanitise replace chain ($→d_, archived→removed renames) as a
-    * column op, vs DuckDB's identical replace chain.
+  /** B4: sanitise ($→d_, archived→removed renames) as one column
+    * expression, vs DuckDB's replace chain.
     */
   def pSanitise(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)

@@ -24,7 +24,7 @@ class OrchestrationSpec extends SparkSpec {
     }
 
   /** Drop `db` and any warehouse directory an earlier JVM left behind:
-    * saveAsTable refuses a managed location that already exists.
+    * a managed CREATE TABLE refuses a location that already exists.
     */
   private def freshDatabase(db: String): Unit = {
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
@@ -37,7 +37,6 @@ class OrchestrationSpec extends SparkSpec {
     val root = Files.createTempDirectory("graft_corp").toString
     val out = Files.createTempDirectory("graft_daily_out").toString
     layoutFixtures(root, Seq("2021-06-15", "2021-06-16"), db = "corp_range")
-    freshDatabase("corp_range_staging")
 
     val store = new InMemoryStatusStore
     // record the global sink's heartbeats for the run, then restore it
@@ -89,7 +88,6 @@ class OrchestrationSpec extends SparkSpec {
   test("a failed update keeps the previous export in the status extras, so a rerun recovers") {
     val root = Files.createTempDirectory("graft_corp_wedge").toString
     layoutFixtures(root, Seq("2021-06-15", "2021-06-16"), db = "corp_wedge")
-    freshDatabase("corp_wedge_staging")
     val dp = "CDI-corp_wedge:documents"
     def run(store: StatusStore, out: String, start: String, end: String): Unit =
       new Runner(spark, store, forceCollectionUpdate = true)
@@ -126,6 +124,30 @@ class OrchestrationSpec extends SparkSpec {
     val rerun = spark.read.orc(extras("S3_Prefix_CDI_Export"))
     assert(rerun.exceptAll(clean).isEmpty && clean.exceptAll(rerun).isEmpty)
     spark.sql("DROP DATABASE IF EXISTS corp_wedge_staging CASCADE")
+  }
+
+  test("exportToHive replaces a managed directory a previous JVM left behind") {
+    // this JVM's catalog has never seen the table, but its managed
+    // location holds a stale ORC file, as after a publish from another
+    // driver over the same warehouse
+    freshDatabase("corp_stale_staging")
+    val out = Files.createTempDirectory("graft_stale_out").toString
+    val runner = new Runner(spark, new InMemoryStatusStore)
+    val export = spark.createDataFrame(Seq(
+      ("a1", "INSERT", "{\"v\":1}", "a1"), ("b2", "DELETE", "{\"v\":2}", "b2")))
+      .toDF("id", "db_type", "val", "id_part")
+    export.write.orc(runner.exportPrefix(out, "corp_stale", "documents", "2021-06-15"))
+    spark.sql("CREATE DATABASE corp_stale_staging")
+    val location = new java.io.File(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier("src_documents", Some("corp_stale_staging"))))
+    spark.createDataFrame(Seq(("zz", "INSERT", "{\"stale\":true}", "zz")))
+      .toDF("id", "db_type", "val", "id_part").write.orc(location.getPath)
+    assert(!spark.catalog.tableExists("corp_stale_staging.src_documents"))
+
+    runner.exportToHive(out, "2021-06-15", "corp_stale", "documents")
+    val table = spark.table("corp_stale_staging.src_documents").select(export.columns.map(col): _*)
+    assert(table.exceptAll(export).isEmpty && export.exceptAll(table).isEmpty)
+    spark.sql("DROP DATABASE IF EXISTS corp_stale_staging CASCADE")
   }
 
   test("Main CLI path runs a 2-date range end-to-end with reference flag names") {

@@ -217,4 +217,31 @@ class PlanLintSpec extends SparkSpec {
     }
     assert(silent.isEmpty, silent.mkString("alert rules on metrics nothing emits: ", ", ", ""))
   }
+
+  /** The CDI job's path writers bind `file:` to the fork-free
+    * NioLocalFileSystem through their writer options, and that binding
+    * has one home: no other product file names `fs.file.impl`.
+    */
+  test("local-fs lint: the CDI path writers carry NioLocalFileSystem.writeOptions") {
+    val sources = productSources.toMap
+    // a member's text: from its `def` to the next member or the end of its object
+    def member(src: String, method: String): String = {
+      val rest = src.substring(src.indexOf(s"\n  def $method(") + 1)
+      rest.substring(0, Seq("\n  def ", "\n  /**", "\n  private", "\n}")
+        .map(rest.indexOf(_)).filter(_ > 0).minOption.getOrElse(rest.length))
+    }
+    val writers = Seq(
+      "pipeline/Ingest.scala" -> "writeDaily",
+      "pipeline/Snapshot.scala" -> "writeSnapshot",
+      "pipeline/Orchestration.scala" -> "writeAuditDaily")
+    val bare = writers.filterNot { case (file, method) =>
+      sources(file).contains(s"\n  def $method(") &&
+        member(sources(file), method).contains(".options(NioLocalFileSystem.writeOptions)")
+    }
+    assert(bare.isEmpty, bare.mkString("path writers without NioLocalFileSystem.writeOptions: ", ", ", ""))
+    val strays = productSources.collect {
+      case (rel, src) if src.contains("fs.file.impl") && rel != "fs/NioLocalFileSystem.scala" => rel
+    }
+    assert(strays.isEmpty, strays.mkString("fs.file.impl outside fs/NioLocalFileSystem.scala: ", ", ", ""))
+  }
 }

@@ -320,6 +320,48 @@ class UcJsonSpec extends AnyFunSuite {
       === """{"_lastModifiedDateTime":{"d_date":"2019-12-14T15:01:02.000Z"}}""")
   }
 
+  test("property: uc_sanitise is byte-equal to the four-replace chain it replaced") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{
+      BoundReference, Expression, Literal, StringReplace, UnsafeProjection}
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    import org.scalacheck.{Gen, Prop, Test => Check}
+
+    // the chain uc_sanitise used to build from Spark's replace(): the oracle
+    def replaceChain(e: Expression): Expression = Seq(
+      "$" -> "d_", "\\u0000" -> "",
+      "_archivedDateTime" -> "_removedDateTime", "_archived" -> "_removed")
+      .foldLeft(e) { case (acc, (from, to)) => StringReplace(acc, Literal(from), Literal(to)) }
+    val in = BoundReference(0, StringType, nullable = true)
+    val exprs = Seq(replaceChain(in), graft.functions.UcSanitise(in))
+    val generated = UnsafeProjection.create(exprs)
+
+    // fragments that overlap every pattern (and its prefixes), escapes
+    // that are and are not the NUL escape, and multi-byte UTF-8
+    val fragment = Gen.frequency(
+      6 -> Gen.oneOf("$", "$$", "\\u0000", "\\u00000", "\\", "u0000", "\\u0001",
+        "_archived", "_archivedDateTime", "_archivedDate", "DateTime", "_arch", "ived", "_",
+        "\"$date\":", "{", "}", ":", ",", "\""),
+      3 -> Gen.oneOf("é", "ç", "日本", "\u00ff", "\ud83d\ude00", " ", "a", "Z"),
+      1 -> Gen.alphaNumStr)
+    val record = Gen.oneOf(Gen.const(""), Gen.listOf(fragment).map(_.mkString))
+    val prop = Prop.forAll(record) { s =>
+      val row = InternalRow(UTF8String.fromString(s))
+      val oracle = exprs.head.eval(row).asInstanceOf[UTF8String]
+      val codegen = generated(row)
+      // interpreted new, generated old, generated new
+      val outputs = Seq(exprs(1).eval(row).asInstanceOf[UTF8String],
+        codegen.getUTF8String(0), codegen.getUTF8String(1))
+      Prop(outputs.forall(_.getBytes.sameElements(oracle.getBytes))) :|
+        s"input ${s.map(c => f"\\u${c.toInt}%04x").mkString}"
+    }
+    val result = Check.check(Check.Parameters.default.withMinSuccessfulTests(2000), prop)
+    assert(result.passed, org.scalacheck.util.Pretty.pretty(result))
+    // SQL NULL stays NULL
+    assert(exprs(1).eval(InternalRow(null)) === null)
+  }
+
   test("collection-specific sanitise guard raises (data.py:167-177)") {
     // the guard the job runs: Ingest.process raises in the plan, on action
     val spark = SparkSpec.session
