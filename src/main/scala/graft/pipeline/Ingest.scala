@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.fs.NioLocalFileSystem
 import graft.functions._
@@ -124,19 +125,45 @@ object Ingest {
       col("db_type"), col("val"))
   }
 
+  /** The schema of a written daily increment, partition columns included.
+    * Readers pass it instead of inferring: inference types an `id_part`
+    * whose values are all digits as an int (`"01"` reads back as `1`) and
+    * reads a parquet footer in a job of its own.
+    */
+  val dailySchema: StructType = StructType.fromDDL(
+    "id STRING, db_type STRING, val STRING, " +
+      "export_year INT, export_month INT, export_day INT, id_part STRING")
+
+  /** The daily layout's clustering, for every writer of that layout:
+    * an AQE rebalance on id_part, then each partition sorted by the
+    * partition columns and id. The reference clusters with
+    * `repartitionByRange(4096, id_part, id)`, whose range bounds cost a
+    * sampling job that runs the whole read chain (gz read, envelope
+    * parse, key join, AES-CTR, validate) a second time. The rebalance is
+    * a hash exchange whose small partitions AQE coalesces and whose
+    * skewed ones it splits, so each id_part directory still gets few
+    * files of about the advisory size, with no sampling job. The sort
+    * leads with every partition column, constant ones included: Spark's
+    * planned write needs its input in partition-column order, and when
+    * the child's sort does not give exactly that order it sorts again by
+    * the partition columns alone and drops the child's sort, which left
+    * files unsorted by id.
+    */
+  def clusterDaily(daily: DataFrame): DataFrame =
+    daily.hint("rebalance", col("id_part"))
+      .sortWithinPartitions("export_year", "export_month", "export_day", "id_part", "id")
+
   /** The reference's daily partitioned write (ingesters.py:530-539):
-    * range-partition on (id_part, id) so each output task owns a
-    * contiguous key range, sort within partitions, dynamic partition
-    * overwrite on (export_year, export_month, export_day, id_part).
-    * Default parquet+zstd; pass ("orc", "zlib") for the reference's
-    * exact storage format — the layout contract is identical. Local
-    * paths write through [[NioLocalFileSystem]].
+    * [[clusterDaily]] (where this differs from the reference), then
+    * dynamic partition overwrite on (export_year, export_month,
+    * export_day, id_part). Default parquet+zstd; pass ("orc", "zlib")
+    * for the reference's exact storage format — the layout contract is
+    * identical. Read it back with [[dailySchema]]. Local paths write
+    * through [[NioLocalFileSystem]].
     */
   def writeDaily(daily: DataFrame, path: String,
       format: String = "parquet", compression: String = "zstd"): Unit =
-    daily
-      .repartitionByRange(col("id_part"), col("id"))
-      .sortWithinPartitions("id")
+    clusterDaily(daily)
       .write
       .options(NioLocalFileSystem.writeOptions)
       .option("partitionOverwriteMode", "dynamic")

@@ -2,9 +2,7 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.TableIdentifier
 import org.apache.spark.sql.functions._
 
 import graft.fs.NioLocalFileSystem
@@ -236,8 +234,8 @@ final class Runner(
     val prevPrefix = extras.get("S3_Prefix_CDI_Export")
     val prevDate = extras.get("CDI_Export_Date")
     val newPrefix = exportPrefix(outRoot, db, collection, exportDate)
-    val outCols = Seq("id", "db_type", "val", "id_part")
-    val dailiesAll = spark.read.parquet(outRoot)
+    val outCols = Snapshot.exportSchema.fieldNames.toSeq
+    val dailiesAll = spark.read.schema(Ingest.dailySchema).parquet(outRoot)
     val dailies = prevDate.fold(dailiesAll) { prev =>
       val Array(y, m, dd) = prev.split("-").map(_.toInt)
       dailiesAll.filter(
@@ -246,7 +244,7 @@ final class Runner(
           (col("export_year") === y && col("export_month") === m && col("export_day") > dd))
     }.select(outCols.map(col): _*)
     val export = prevPrefix
-      .map(p => spark.read.orc(p).select(outCols.map(col): _*))
+      .map(p => spark.read.schema(Snapshot.exportSchema).orc(p).select(outCols.map(col): _*))
       .getOrElse(dailies.limit(0))
     val merged = Snapshot.merge(export, dailies, Seq("id_part", "id"),
       when(col("db_type") === "DELETE", 1).otherwise(0))
@@ -255,33 +253,32 @@ final class Runner(
       Map("S3_Prefix_CDI_Export" -> newPrefix, "CDI_Export_Date" -> exportDate))
   }
 
-  /** Staging publication (ingesters.py:283-339): drop and re-publish
-    * the collection's staging table from the latest export. The
-    * reference's typed per-table DDLs are files bundled on its EMR
-    * image (deployment detail); the published shape here is the
-    * export's canonical (id, db_type, val, id_part) rows.
+  /** Staging publication (ingesters.py:283-339): drop and re-declare
+    * the collection's staging table over the latest export. The
+    * reference copies the export into a managed table; here the table is
+    * EXTERNAL at the export prefix, so publishing is metadata only (no
+    * copy job, no second copy of every byte) and RECOVER PARTITIONS
+    * registers the export's id_part directories, without which the table
+    * reads no rows. The table reads the export's own files, so an export
+    * must outlive every table that points at it; dropping the table
+    * leaves the export alone. The reference's typed per-table DDLs are
+    * files bundled on its EMR image (deployment detail); the published
+    * shape here is the export's canonical (id, db_type, val, id_part)
+    * rows, in ORC like the export — the reference's Hive staging format.
     */
   def exportToHive(outRoot: String, exportDate: String, db: String, collection: String): Unit = {
     val dataProduct = s"CDI-$db:$collection"
     val prefix = status.getExtras(correlationId, dataProduct)
       .getOrElse("S3_Prefix_CDI_Export", exportPrefix(outRoot, db, collection, exportDate))
     val stagingDb = s"${db}_staging"
-    val name = TableIdentifier(s"src_${collection.toLowerCase}", Some(stagingDb))
-    val table = name.unquotedString
+    val table = s"$stagingDb.src_${collection.toLowerCase}"
     val sql = new SqlRunner(spark)
     sql.createDatabaseIfNotExist(stagingDb)
-    if (spark.catalog.tableExists(table)) sql.executeQueries(Seq(s"DROP TABLE $table"))
-    else {
-      // a catalog that never saw the table (a new JVM over the same
-      // warehouse) cannot drop it, but its managed directory may still
-      // be on disk, and saveAsTable refuses to write over it: remove
-      // what the drop would have removed
-      val location = new Path(spark.sessionState.catalog.defaultTablePath(name))
-      location.getFileSystem(spark.sessionState.newHadoopConf()).delete(location, true)
-    }
-    // the staging table is ORC like the export it publishes — the
-    // reference's Hive staging format (ingesters.py:283-339)
-    spark.read.orc(prefix).write.format("orc").saveAsTable(table)
+    sql.executeQueries(Seq(
+      s"DROP TABLE IF EXISTS $table",
+      s"""CREATE TABLE $table (${Snapshot.exportSchema.toDDL}) USING orc
+         |PARTITIONED BY (id_part) LOCATION '$prefix'""".stripMargin,
+      s"ALTER TABLE $table RECOVER PARTITIONS"))
   }
 }
 

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.fs.NioLocalFileSystem
 
@@ -19,6 +20,12 @@ import graft.fs.NioLocalFileSystem
   * is a struct; the sort is by grouping key only, on the already-
   * collapsed partials — at 100 TB the win is the shuffle volume.) The
   * window variant is kept for oracle/spec cross-checking.
+  *
+  * Where the write differs from the reference: [[writeSnapshot]]
+  * clusters with an AQE rebalance on id_part, not the reference's
+  * `repartitionByRange(4096, id_part, id)`, so no job samples the merge
+  * for range bounds. Which rows share a file changes; the rows, the
+  * id_part directories and the format do not.
   */
 object Snapshot {
 
@@ -63,18 +70,26 @@ object Snapshot {
   def merge(export: DataFrame, dailies: DataFrame, keys: Seq[String], order: Column): DataFrame =
     latestByKey(export.unionByName(dailies), keys, order)
 
-  /** The reference's snapshot write layout (ingesters.py:450-458):
-    * range-partitioned on (id_part, id) — numPartitions left to AQE
-    * locally; a cluster deployment would size it (reference hardcodes
-    * 4096) — written partitioned by id_part so downstream reads prune.
-    * Default format is ORC+zlib, the reference's exact snapshot/export
-    * storage (ingesters.py:341-460); read back with `spark.read.orc`.
-    * Local paths write through [[NioLocalFileSystem]].
+  /** The schema of a written snapshot (an export), partition column
+    * included; readers pass it for the reason [[Ingest.dailySchema]]
+    * gives.
+    */
+  val exportSchema: StructType =
+    StructType.fromDDL("id STRING, db_type STRING, val STRING, id_part STRING")
+
+  /** The reference's snapshot write layout (ingesters.py:450-458),
+    * written partitioned by id_part so downstream reads prune. An AQE
+    * rebalance on id_part (a hash exchange that AQE coalesces and splits
+    * to the advisory size) gives each id_part directory few files with
+    * no sampling job; see the object doc for where this differs from the
+    * reference. Default format is ORC+zlib, the reference's exact
+    * snapshot/export storage (ingesters.py:341-460); read it back with
+    * [[exportSchema]]. Local paths write through [[NioLocalFileSystem]].
     */
   def writeSnapshot(snapshot: DataFrame, path: String,
       format: String = "orc", compression: String = "zlib"): Unit =
     snapshot
-      .repartitionByRange(col("id_part"), col("id"))
+      .hint("rebalance", col("id_part"))
       .write
       .options(NioLocalFileSystem.writeOptions)
       .partitionBy("id_part")

@@ -2252,31 +2252,18 @@ object Streaming {
           val parsed = graft.pipeline.Envelope.parse(spread).persist()
           val landed = graft.pipeline.Ingest.dailyIncrement(
             graft.pipeline.Ingest.pipelineFromParsed(parsed), "2021-06-15")
-          // the writeDaily layout discipline, append-mode: range-cluster
-          // on (id_part, id) so each task writes a contiguous slice of
-          // partition dirs — without it every task touches every id_part
-          // and a microbatch lands tasks×id_parts small files.
-          // PERSISTED first: repartitionByRange SAMPLES its child for
-          // range boundaries, which otherwise executes the whole
-          // AES+Jackson pipeline a second time per microbatch. Measured
-          // NEUTRAL at sf0.1 (trigger machinery dominates the row), kept
-          // because the second execution is real in the plan and decrypt
-          // is the dominant term at production volume; the microbatch is
-          // bounded, so caching it is O(batch) memory at any scale
-          landed.persist()
+          // the writeDaily layout, append-mode: without the clustering
+          // every task touches every id_part and a microbatch lands
+          // tasks×id_parts small files. Its exchange samples nothing, so
+          // the AES+Jackson chain runs once per row with no cache
           try {
-            // dead-letter first (r16 ADVICE): it reads ONLY `parsed`, so
-            // writing it before the landed chain materializes `landed`
-            // shrinks the window where both O(batch) caches are held
-            // concurrently to just the landed append itself
             graft.pipeline.Ingest.malformedFromParsed(parsed)
               .write.mode("overwrite").text(s"$base/dead/batch$batchId")
-            landed.repartitionByRange(col("id_part"), col("id"))
-              .sortWithinPartitions("id")
+            graft.pipeline.Ingest.clusterDaily(landed)
               .write.mode("append")
               .partitionBy("export_year", "export_month", "export_day", "id_part")
               .parquet(s"$base/data")
-          } finally { landed.unpersist(); parsed.unpersist() }
+          } finally parsed.unpersist()
           ()
         }
         .trigger(Trigger.AvailableNow())

@@ -11,11 +11,11 @@ import org.apache.hadoop.fs.{Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
 
 import graft.fs.NioRawLocalFileSystem
-import graft.pipeline.{AuditPublish, Envelope, Ingest, Snapshot}
+import graft.pipeline.{AuditPublish, Envelope, InMemoryStatusStore, Ingest, Runner, Snapshot}
 
-/** graft.fs.NioLocalFileSystem: the CDI path writers set file and
-  * directory modes without forking `chmod`, and the modes they set are
-  * the ones stock Hadoop sets.
+/** graft.fs.NioLocalFileSystem: the CDI path writers, and a whole CDI
+  * date, set file and directory modes without forking `chmod`, and the
+  * modes they set are the ones stock Hadoop sets.
   */
 class NioLocalFileSystemSpec extends SparkSpec {
 
@@ -43,18 +43,29 @@ class NioLocalFileSystemSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_nio_writes")
     val processed = Ingest.pipeline(Envelope.synthesize(spark, sfDir))
     val daily = Ingest.dailyIncrement(processed, "2021-06-15")
+    // one whole CDI date (daily, update, staging publication) reads its
+    // envelopes from the data date before the export date
+    val root = out.resolve("in").toString
+    Envelope.synthesize(spark, sfDir).write.text(s"$root/2021/06/14/corp_nio/documents")
+    // the catalog creates a database's directory through the session's
+    // own file system, once per database rather than per date
+    spark.sql("CREATE DATABASE IF NOT EXISTS corp_nio_staging")
     val commands = processStarts {
       Ingest.writeDaily(daily, out.resolve("daily").toString)
       Snapshot.writeSnapshot(daily.select("id", "db_type", "val", "id_part"),
         out.resolve("snapshot").toString)
       AuditPublish.writeAuditDaily(processed, out.resolve("audit").toString)
+      new Runner(spark, new InMemoryStatusStore, forceCollectionUpdate = true).runRange(
+        root, "2021-06-15", "2021-06-15", "corp_nio", "documents", out.resolve("cdi").toString)
       // the recording sees process starts: this one must show up
       new ProcessBuilder("true").start().waitFor()
     }
     assert(commands.exists(_.trim == "true"), commands)
     assert(spark.read.parquet(out.resolve("daily").toString).count() === daily.count())
+    assert(spark.table("corp_nio_staging.src_documents").count() === daily.count())
     val chmods = commands.filter(_.contains("chmod"))
     assert(chmods.isEmpty, s"${chmods.size} chmod forks, first: ${chmods.take(3)}")
+    spark.sql("DROP DATABASE IF EXISTS corp_nio_staging CASCADE")
     Stage.deleteRecursively(out.toFile)
   }
 

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.CatalogTableType
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 import graft.pipeline._
 
@@ -16,12 +20,15 @@ class OrchestrationSpec extends SparkSpec {
     * data date PRECEDING each export date.
     */
   private def layoutFixtures(root: String, exportDates: Seq[String],
-      db: String = "corp"): Unit =
+      db: String = "corp", lines: => DataFrame = Envelope.synthesize(spark, sfDir)): Unit =
     exportDates.foreach { ed =>
       val prev = java.time.LocalDate.parse(ed).minusDays(1)
       val dir = f"$root/${prev.getYear}%04d/${prev.getMonthValue}%02d/${prev.getDayOfMonth}%02d/$db/documents"
-      Envelope.synthesize(spark, sfDir).write.mode("overwrite").text(dir)
+      lines.write.mode("overwrite").text(dir)
     }
+
+  private def readExport(prefix: String): DataFrame =
+    spark.read.schema(Snapshot.exportSchema).orc(prefix)
 
   /** Drop `db` and any warehouse directory an earlier JVM left behind:
     * a managed CREATE TABLE refuses a location that already exists.
@@ -76,7 +83,7 @@ class OrchestrationSpec extends SparkSpec {
     assert(extras === Map(
       "S3_Prefix_CDI_Export" -> s"$out/_exports/corp_range/documents/2021-06-16",
       "CDI_Export_Date" -> "2021-06-16"))
-    val snapshot = spark.read.orc(extras("S3_Prefix_CDI_Export"))
+    val snapshot = readExport(extras("S3_Prefix_CDI_Export"))
     assert(snapshot.count() === Tables.documents(spark, sfDir).count())
     assert(snapshot.select("id_part", "id").distinct().count() === snapshot.count())
     val staging = spark.table("corp_range_staging.src_documents")
@@ -96,7 +103,7 @@ class OrchestrationSpec extends SparkSpec {
     val cleanOut = Files.createTempDirectory("graft_wedge_clean").toString
     val cleanStore = new InMemoryStatusStore
     run(cleanStore, cleanOut, "2021-06-15", "2021-06-16")
-    val clean = spark.read.orc(cleanStore.getExtras("local", dp)("S3_Prefix_CDI_Export"))
+    val clean = readExport(cleanStore.getExtras("local", dp)("S3_Prefix_CDI_Export"))
 
     val out = Files.createTempDirectory("graft_wedge_out").toString
     val store = new InMemoryStatusStore
@@ -121,12 +128,12 @@ class OrchestrationSpec extends SparkSpec {
     assert(extras === Map(
       "S3_Prefix_CDI_Export" -> s"$out/_exports/corp_wedge/documents/2021-06-16",
       "CDI_Export_Date" -> "2021-06-16"))
-    val rerun = spark.read.orc(extras("S3_Prefix_CDI_Export"))
+    val rerun = readExport(extras("S3_Prefix_CDI_Export"))
     assert(rerun.exceptAll(clean).isEmpty && clean.exceptAll(rerun).isEmpty)
     spark.sql("DROP DATABASE IF EXISTS corp_wedge_staging CASCADE")
   }
 
-  test("exportToHive replaces a managed directory a previous JVM left behind") {
+  test("exportToHive ignores a managed directory a previous JVM left behind") {
     // this JVM's catalog has never seen the table, but its managed
     // location holds a stale ORC file, as after a publish from another
     // driver over the same warehouse
@@ -136,18 +143,53 @@ class OrchestrationSpec extends SparkSpec {
     val export = spark.createDataFrame(Seq(
       ("a1", "INSERT", "{\"v\":1}", "a1"), ("b2", "DELETE", "{\"v\":2}", "b2")))
       .toDF("id", "db_type", "val", "id_part")
-    export.write.orc(runner.exportPrefix(out, "corp_stale", "documents", "2021-06-15"))
+    val prefix = runner.exportPrefix(out, "corp_stale", "documents", "2021-06-15")
+    Snapshot.writeSnapshot(export, prefix)
     spark.sql("CREATE DATABASE corp_stale_staging")
-    val location = new java.io.File(spark.sessionState.catalog.defaultTablePath(
-      org.apache.spark.sql.catalyst.TableIdentifier("src_documents", Some("corp_stale_staging"))))
+    val name = TableIdentifier("src_documents", Some("corp_stale_staging"))
+    val location = new java.io.File(spark.sessionState.catalog.defaultTablePath(name))
     spark.createDataFrame(Seq(("zz", "INSERT", "{\"stale\":true}", "zz")))
       .toDF("id", "db_type", "val", "id_part").write.orc(location.getPath)
     assert(!spark.catalog.tableExists("corp_stale_staging.src_documents"))
 
+    // published twice: the second publish replaces the first table
     runner.exportToHive(out, "2021-06-15", "corp_stale", "documents")
+    runner.exportToHive(out, "2021-06-15", "corp_stale", "documents")
+    // the table is EXTERNAL over the export itself, not a copy
+    val meta = spark.sessionState.catalog.getTableMetadata(name)
+    assert(meta.tableType === CatalogTableType.EXTERNAL)
+    assert(meta.location.getPath === prefix)
+    def sameRows(a: DataFrame, b: DataFrame) = a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty
     val table = spark.table("corp_stale_staging.src_documents").select(export.columns.map(col): _*)
-    assert(table.exceptAll(export).isEmpty && export.exceptAll(table).isEmpty)
+    assert(sameRows(table, export))
+    // dropping the table leaves the export, and the stale directory, alone
+    spark.sql("DROP TABLE corp_stale_staging.src_documents")
+    assert(sameRows(readExport(prefix).select(export.columns.map(col): _*), export))
+    assert(location.exists())
     spark.sql("DROP DATABASE IF EXISTS corp_stale_staging CASCADE")
+  }
+
+  test("a collection whose id_parts are all digits keeps id_part a string") {
+    val root = Files.createTempDirectory("graft_corp_digits").toString
+    val out = Files.createTempDirectory("graft_digits_out").toString
+    // every envelope id gains the prefix "01", so each id_part is "01",
+    // which partition-type inference would read as the int 1
+    layoutFixtures(root, Seq("2021-06-15", "2021-06-16"), db = "corp_digits",
+      lines = Envelope.synthesize(spark, sfDir).select(regexp_replace(col("value"),
+        "\"_id\":\\{\"id\":\"", "\"_id\":{\"id\":\"01").as("value")))
+    val store = new InMemoryStatusStore
+    new Runner(spark, store, forceCollectionUpdate = true).runRange(root,
+      "2021-06-15", "2021-06-16", "corp_digits", "documents", out)
+
+    val snapshot = readExport(
+      store.getExtras("local", "CDI-corp_digits:documents")("S3_Prefix_CDI_Export"))
+    val staging = spark.table("corp_digits_staging.src_documents")
+    Seq("snapshot" -> snapshot, "staging" -> staging).foreach { case (what, df) =>
+      assert(df.schema("id_part").dataType === StringType, what)
+      assert(df.select("id_part").distinct().collect().map(_.get(0)).toSeq === Seq("01"), what)
+      assert(df.count() === Tables.documents(spark, sfDir).count(), what)
+    }
+    spark.sql("DROP DATABASE IF EXISTS corp_digits_staging CASCADE")
   }
 
   test("Main CLI path runs a 2-date range end-to-end with reference flag names") {

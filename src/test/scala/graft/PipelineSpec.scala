@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.pipeline._
@@ -120,6 +122,25 @@ class PipelineSpec extends SparkSpec {
     // read-back equals what went in
     val back = spark.read.parquet(tmp)
     assert(back.count() === daily.count())
+  }
+
+  test("writeDaily sorts every file it writes by id") {
+    val tmp = Files.createTempDirectory("graft_daily_sorted")
+    val daily = Ingest.dailyIncrement(
+      Ingest.pipeline(Envelope.synthesize(spark, dir)), "2021-06-15")
+    // two halves, one after the other: the input is not in id order, so
+    // only the writer's own sort can put each file in order
+    val odd = pmod(hash(col("id")), lit(2)) === 1
+    Ingest.writeDaily(daily.filter(odd).unionByName(daily.filter(!odd)), tmp.toString)
+    val files = Files.walk(tmp).iterator().asScala
+      .filter(f => f.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(files.nonEmpty)
+    val unsorted = files.filter { f =>
+      val ids = spark.read.parquet(f.toString).select("id").collect().map(_.getString(0)).toSeq
+      ids != ids.sorted
+    }
+    assert(unsorted.isEmpty, s"${unsorted.size} of ${files.size} files unsorted: ${unsorted.take(3)}")
+    Stage.deleteRecursively(tmp.toFile)
   }
 
   test("writeSnapshot layout + merge keeps one latest row per key") {

@@ -1,9 +1,12 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Physical-plan shape contracts for representative queries — the
   * properties that make plans survive a 100× scale-up, asserted so a
@@ -19,6 +22,37 @@ class PlanShapeSpec extends SparkSpec {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
+
+  /** Every node of `plan`, with AQE's final plans and query stages
+    * opened (their plans are not children).
+    */
+  private def flatten(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case a: AdaptiveSparkPlanExec => flatten(a.executedPlan)
+    case q: QueryStageExec => q +: flatten(q.plan)
+    case p => p +: p.children.flatMap(flatten)
+  }
+
+  /** The executed plan of the file write to `path` that `body` runs. */
+  private def writePlan(path: String)(body: => Unit): SparkPlan = {
+    val plans = new java.util.concurrent.LinkedBlockingQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        flatten(qe.executedPlan).collectFirst {
+          case w: DataWritingCommandExec => w.cmd
+        }.collect {
+          case c: InsertIntoHadoopFsRelationCommand if c.outputPath.toString.endsWith(path) =>
+            plans.add(qe.executedPlan)
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      body
+      // the listener bus delivers asynchronously
+      Option(plans.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .getOrElse(fail(s"no write to $path reached the listener"))
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   private def countShuffles(df: DataFrame): Int =
     executed(df).collect { case e: ShuffleExchangeLike => e }.size
@@ -563,6 +597,28 @@ class PlanShapeSpec extends SparkSpec {
       assert(rangeEx.isEmpty,
         s"$name plans a global range-sort exchange:\n${executed(df)}")
     }
+  }
+
+  test("CDI daily and snapshot writes cluster without a range-partitioning exchange") {
+    // a range exchange samples its child in a job of its own: for
+    // writeDaily that reruns the whole decrypt/validate chain
+    val daily = graft.pipeline.Ingest.dailyIncrement(graft.pipeline.Ingest.pipeline(
+      graft.pipeline.Envelope.synthesize(spark, sfDir)), "2021-06-15")
+    val out = java.nio.file.Files.createTempDirectory("graft_write_plans")
+    val writes = Seq[(String, String => Unit)](
+      "writeDaily" -> (graft.pipeline.Ingest.writeDaily(daily, _)),
+      "writeSnapshot" -> (graft.pipeline.Snapshot.writeSnapshot(
+        daily.select("id", "db_type", "val", "id_part"), _)))
+    writes.foreach { case (name, write) =>
+      val path = out.resolve(name).toString
+      val plan = writePlan(path)(write(path))
+      val exchanges = flatten(plan).collect { case e: ShuffleExchangeLike => e }
+      assert(exchanges.nonEmpty, s"$name plans no clustering exchange:\n$plan")
+      val range = exchanges.filter(_.outputPartitioning.isInstanceOf[
+        org.apache.spark.sql.catalyst.plans.physical.RangePartitioning])
+      assert(range.isEmpty, s"$name plans a range-partitioning exchange:\n$plan")
+    }
+    Stage.deleteRecursively(out.toFile)
   }
 
   test("aggregations keep map-side partial aggregation") {
