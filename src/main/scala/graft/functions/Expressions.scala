@@ -31,6 +31,41 @@ case class AesCtrDecrypt(first: Expression, second: Expression, third: Expressio
     copy(first = newFirst, second = newSecond, third = newThird)
 }
 
+/** Resolved data keys, encrypted key → plaintext key. Its `toString`
+  * names only the count, so no plan string can print a key.
+  */
+final class DataKeys(keys: Map[String, String]) extends Serializable {
+  val table: java.util.HashMap[UTF8String, UTF8String] = {
+    val m = new java.util.HashMap[UTF8String, UTF8String](keys.size * 2)
+    keys.foreach { case (k, v) => m.put(UTF8String.fromString(k), UTF8String.fromString(v)) }
+    m
+  }
+  override def toString: String = s"DataKeys(${table.size} keys)"
+}
+
+/** encrypted data key → its resolved plaintext key, null when the key
+  * was not resolved: the per-executor key cache of the reference
+  * (dks.py:96-116) as one hash lookup in generated code. The keys travel
+  * as a reference object, not a literal, and the expression prints as
+  * its child alone, so explain output, the UI and event logs never show
+  * key material.
+  */
+case class DataKeyLookup(child: Expression, keys: DataKeys) extends UnaryExpression {
+  override def dataType: DataType = StringType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "data_key_lookup"
+  override protected def stringArgs: Iterator[Any] = Iterator(child)
+  protected override def nullSafeEval(input: Any): Any = keys.table.get(input)
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val table = ctx.addReferenceObj("dataKeys", keys.table, "java.util.HashMap")
+    nullSafeCodeGen(ctx, ev, c =>
+      s"""${ev.value} = (UTF8String) $table.get($c);
+         |${ev.isNull} = ${ev.value} == null;""".stripMargin)
+  }
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
 /** utf8 plaintext × base64 key × base64 iv → base64 ciphertext (fixtures). */
 case class AesCtrEncrypt(first: Expression, second: Expression, third: Expression)
     extends TernaryExpression {

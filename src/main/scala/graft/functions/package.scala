@@ -12,6 +12,12 @@ package object functions {
   def aes_ctr_decrypt(data: Column, key: Column, iv: Column): Column =
     toCol(AesCtrDecrypt(toExpr(data), toExpr(key), toExpr(iv)))
 
+  /** Encrypted data key → its plaintext key from `keys`, null when the
+    * key was not resolved. Prints as `data_key_lookup(<keyEnc>)`.
+    */
+  def data_key_lookup(keyEnc: Column, keys: Map[String, String]): Column =
+    toCol(DataKeyLookup(toExpr(keyEnc), new DataKeys(keys)))
+
   /** AES-CTR encrypt (fixture/test path). */
   def aes_ctr_encrypt(data: Column, key: Column, iv: Column): Column =
     toCol(AesCtrEncrypt(toExpr(data), toExpr(key), toExpr(iv)))

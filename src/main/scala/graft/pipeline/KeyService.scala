@@ -9,10 +9,12 @@ import org.apache.spark.sql.functions._
   * per-executor dict cache (reference: steps/dks.py:96-134 — HTTP decrypt
   * of `encryptedEncryptionKey`, cache keyed on the encrypted key). The
   * Spark-first re-expression exploits that distinct data keys are few
-  * (hundreds, not billions): resolve the DISTINCT encrypted keys once on
-  * the driver, then broadcast-join the tiny plaintext map onto the
-  * stream. One bounded collect, zero per-record RPC, no mutable executor
-  * state, and the join stays in whole-stage codegen.
+  * (hundreds, not billions): collect the distinct encrypted keys in one
+  * job with no shuffle, resolve them on the driver, then bind each row's
+  * plaintext key with a hash lookup in generated code
+  * ([[graft.functions.DataKeyLookup]]). One bounded collect, zero
+  * per-record RPC, no mutable executor state, no join, and no key
+  * material in any plan string.
   *
   * `resolve` is pluggable (the real deployment would call its KMS; tests
   * mirror the reference's "no datakey encryption" and "-decrypted" mocks,
@@ -25,20 +27,28 @@ final class KeyService(resolve: String => String) extends Serializable {
     */
   @volatile var lastResolvedCount: Int = 0
 
-  /** parsed envelope (column `key_enc`) → same rows + `data_key` column. */
+  /** parsed envelope (column `key_enc`) → `key_enc`, the other columns,
+    * then `data_key`: the column order of an inner join on `key_enc`,
+    * whose semantics it keeps, since a row whose key did not resolve is
+    * dropped.
+    */
   def withDataKeys(parsed: DataFrame): DataFrame = {
     val spark = parsed.sparkSession
     import spark.implicits._
-    // bounded driver-side collect: distinct encrypted keys only
-    val distinctKeys = parsed.select("key_enc").distinct()
-      .as[String].collect().toSeq
+    // one job, no shuffle: each partition ships its own distinct keys
+    // (at most partitions × distinct keys strings), the driver dedupes
+    val distinctKeys = parsed.select("key_enc").as[String]
+      .mapPartitions(_.toSet.iterator).collect().distinct.filter(_ != null).toSeq
     lastResolvedCount = distinctKeys.length
     // the reference's dks_miss accumulator (dks.py:96-116): each
     // distinct key is one real decrypt call; every other record is by
-    // construction a cache hit of the broadcast map
+    // construction a hit of the resolved map
     MetricsSink.global.counter("dks.decrypt_calls", distinctKeys.length)
-    val keyMap = distinctKeys.map(k => k -> resolve(k)).toDF("key_enc", "data_key")
-    parsed.join(broadcast(keyMap), Seq("key_enc"))
+    val keyMap = distinctKeys.map(k => k -> resolve(k)).toMap
+    val rest = parsed.columns.filter(_ != "key_enc").map(col).toSeq
+    parsed.select(col("key_enc") +: rest :+
+        graft.functions.data_key_lookup(col("key_enc"), keyMap).as("data_key"): _*)
+      .filter(col("data_key").isNotNull)
   }
 }
 

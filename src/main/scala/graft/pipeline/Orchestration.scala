@@ -2,7 +2,8 @@ package graft.pipeline
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.fs.NioLocalFileSystem
@@ -220,37 +221,53 @@ final class Runner(
 
   /** Forced collection update (ingesters.py:341-460): locate the latest
     * export via the status store's extras, read the dailies written
-    * SINCE it (partition-pruned on the export y/m/d columns), union with
-    * that export, keep one record per (id_part, id) — DELETE outranks
-    * INSERT, the reference's `row_number over orderBy("db_type")` asc —
-    * and write the new export partitioned by id_part, recording its
-    * prefix+date in the status extras for the next run only once the
-    * export is written: a failed or partial write leaves the extras on
-    * the previous export, so a rerun of the date starts from it.
+    * SINCE it, union with that export, keep one record per (id_part,
+    * id) — DELETE outranks INSERT, the reference's `row_number over
+    * orderBy("db_type")` asc — and write the new export partitioned by
+    * id_part, recording its prefix+date in the status extras for the
+    * next run only once the export is written: a failed or partial write
+    * leaves the extras on the previous export, so a rerun of the date
+    * starts from it. The reference reads the whole daily root and
+    * filters on the export date; here only the days after the previous
+    * export are read ([[daysAfter]]), so a date's cost does not grow
+    * with the history on disk.
     */
   def update(outRoot: String, exportDate: String, db: String, collection: String): Unit = {
     val dataProduct = s"CDI-$db:$collection"
     val extras = status.getExtras(correlationId, dataProduct)
     val prevPrefix = extras.get("S3_Prefix_CDI_Export")
-    val prevDate = extras.get("CDI_Export_Date")
     val newPrefix = exportPrefix(outRoot, db, collection, exportDate)
-    val outCols = Snapshot.exportSchema.fieldNames.toSeq
-    val dailiesAll = spark.read.schema(Ingest.dailySchema).parquet(outRoot)
-    val dailies = prevDate.fold(dailiesAll) { prev =>
-      val Array(y, m, dd) = prev.split("-").map(_.toInt)
-      dailiesAll.filter(
-        col("export_year") > y ||
-          (col("export_year") === y && col("export_month") > m) ||
-          (col("export_year") === y && col("export_month") === m && col("export_day") > dd))
-    }.select(outCols.map(col): _*)
+    val outCols = Snapshot.exportSchema.fieldNames.toSeq.map(col)
+    val dailies = (daysAfter(outRoot, extras.get("CDI_Export_Date")) match {
+      case Seq() => spark.createDataFrame(java.util.Collections.emptyList[Row](), Ingest.dailySchema)
+      case days => spark.read.schema(Ingest.dailySchema).option("basePath", outRoot).parquet(days: _*)
+    }).select(outCols: _*)
     val export = prevPrefix
-      .map(p => spark.read.schema(Snapshot.exportSchema).orc(p).select(outCols.map(col): _*))
+      .map(p => spark.read.schema(Snapshot.exportSchema).orc(p).select(outCols: _*))
       .getOrElse(dailies.limit(0))
     val merged = Snapshot.merge(export, dailies, Seq("id_part", "id"),
       when(col("db_type") === "DELETE", 1).otherwise(0))
-    Snapshot.writeSnapshot(merged.select(outCols.map(col): _*), newPrefix)
+    Snapshot.writeSnapshot(merged.select(outCols: _*), newPrefix)
     status.updateStatus(correlationId, dataProduct, StatusStore.InProgress, exportDate,
       Map("S3_Prefix_CDI_Export" -> newPrefix, "CDI_Export_Date" -> exportDate))
+  }
+
+  /** The `export_year=/export_month=/export_day=` directories under
+    * `outRoot` dated after `after` (every one when it is None), found by
+    * one glob on the driver: no Spark job, and no listing of the days
+    * the previous export already holds.
+    */
+  private def daysAfter(outRoot: String, after: Option[String]): Seq[String] = {
+    val root = new Path(outRoot)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val days = Option(fs.globStatus(new Path(root, "export_year=*/export_month=*/export_day=*")))
+      .getOrElse(Array.empty[FileStatus]).filter(_.isDirectory).map(_.getPath)
+    def date(day: Path): java.time.LocalDate = {
+      def value(p: Path) = p.getName.split("=", 2)(1).toInt
+      java.time.LocalDate.of(value(day.getParent.getParent), value(day.getParent), value(day))
+    }
+    val since = after.map(java.time.LocalDate.parse)
+    days.filter(d => since.forall(date(d).isAfter)).map(_.toString).toSeq
   }
 
   /** Staging publication (ingesters.py:283-339): drop and re-declare
@@ -259,12 +276,16 @@ final class Runner(
     * EXTERNAL at the export prefix, so publishing is metadata only (no
     * copy job, no second copy of every byte) and RECOVER PARTITIONS
     * registers the export's id_part directories, without which the table
-    * reads no rows. The table reads the export's own files, so an export
-    * must outlive every table that points at it; dropping the table
-    * leaves the export alone. The reference's typed per-table DDLs are
-    * files bundled on its EMR image (deployment detail); the published
-    * shape here is the export's canonical (id, db_type, val, id_part)
-    * rows, in ORC like the export — the reference's Hive staging format.
+    * reads no rows. The partitions are registered without statistics:
+    * Spark's fast-stats pass (file count and size per partition) is a
+    * Spark job once there are more than 10 partitions, and nothing reads
+    * those statistics. The table reads the export's own files, so an
+    * export must outlive every table that points at it; dropping the
+    * table leaves the export alone. The reference's typed per-table DDLs
+    * are files bundled on its EMR image (deployment detail); the
+    * published shape here is the export's canonical (id, db_type, val,
+    * id_part) rows, in ORC like the export — the reference's Hive
+    * staging format.
     */
   def exportToHive(outRoot: String, exportDate: String, db: String, collection: String): Unit = {
     val dataProduct = s"CDI-$db:$collection"
@@ -277,9 +298,20 @@ final class Runner(
     sql.executeQueries(Seq(
       s"DROP TABLE IF EXISTS $table",
       s"""CREATE TABLE $table (${Snapshot.exportSchema.toDDL}) USING orc
-         |PARTITIONED BY (id_part) LOCATION '$prefix'""".stripMargin,
-      s"ALTER TABLE $table RECOVER PARTITIONS"))
+         |PARTITIONED BY (id_part) LOCATION '$prefix'""".stripMargin))
+    // Main.run publishes collections from several threads over one
+    // session: unserialized, one thread's scope could restore the conf
+    // while another's RECOVER runs
+    Runner.recoverLock.synchronized {
+      graft.Stage.withConf(spark, "spark.sql.hive.gatherFastStats" -> "false") {
+        spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
+      }
+    }
   }
+}
+
+object Runner {
+  private val recoverLock = new Object
 }
 
 /** businessAudit Hive publication (ingesters.py:140-205 distilled):

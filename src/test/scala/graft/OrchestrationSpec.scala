@@ -133,6 +133,64 @@ class OrchestrationSpec extends SparkSpec {
     spark.sql("DROP DATABASE IF EXISTS corp_wedge_staging CASCADE")
   }
 
+  /** Jobs that list the leaf files under `dir`'s subdirectories: Spark
+    * lists a directory with more than 32 subdirectories
+    * (`spark.sql.sources.parallelPartitionDiscovery.threshold`) in a job
+    * of its own.
+    */
+  private def listings(jobs: Seq[String], dir: String): Seq[String] =
+    jobs.filter(j => j.startsWith("Listing leaf files") && j.contains(s"$dir/"))
+
+  test("one CDI date with a collection update runs at most six Spark jobs") {
+    val root = Files.createTempDirectory("graft_corp_jobs").toString
+    val out = Files.createTempDirectory("graft_jobs_out").toString
+    layoutFixtures(root, Seq("2021-06-15"), db = "corp_jobs")
+    val jobs = JobLog.during(spark) {
+      new Runner(spark, new InMemoryStatusStore, forceCollectionUpdate = true).runRange(root,
+        "2021-06-15", "2021-06-15", "corp_jobs", "documents", out)
+    }.jobs
+    // sf0.001 writes 100 id_part directories a day, so the update's read
+    // of the new day lists them in a job; the budget is the rest
+    val day = listings(jobs, s"$out/export_year=2021/export_month=6/export_day=15")
+    assert(day.size <= 1 && jobs.size - day.size <= 6,
+      jobs.zipWithIndex.map { case (j, i) => s"  ${i + 1}. $j" }
+        .mkString(s"${jobs.size} jobs for one date:\n", "\n", ""))
+    assert(spark.table("corp_jobs_staging.src_documents").count() ===
+      Tables.documents(spark, sfDir).count())
+    spark.sql("DROP DATABASE IF EXISTS corp_jobs_staging CASCADE")
+  }
+
+  test("update reads only the days after the previous export") {
+    val root = Files.createTempDirectory("graft_corp_days").toString
+    val out = Files.createTempDirectory("graft_days_out").toString
+    val dates = Seq("2021-06-15", "2021-06-16", "2021-06-17")
+    layoutFixtures(root, dates, db = "corp_days")
+    val store = new InMemoryStatusStore
+    def run(date: String): Unit = new Runner(spark, store, forceCollectionUpdate = true)
+      .runRange(root, date, date, "corp_days", "documents", out)
+    run(dates(0))
+    run(dates(1))
+    val jobs = JobLog.during(spark)(run(dates(2))).jobs
+    val old = Seq(15, 16).flatMap(d => listings(jobs, s"$out/export_year=2021/export_month=6/export_day=$d"))
+    assert(old.isEmpty, jobs.mkString("the update listed days the previous export holds:\n", "\n", ""))
+
+    // the export equals a merge of every daily ever written
+    val all = spark.read.schema(Ingest.dailySchema).parquet(out)
+      .select(Snapshot.exportSchema.fieldNames.toSeq.map(col): _*)
+    val expected = Snapshot.merge(all.limit(0), all, Seq("id_part", "id"),
+      when(col("db_type") === "DELETE", 1).otherwise(0))
+    val export = readExport(store.getExtras("local", "CDI-corp_days:documents")("S3_Prefix_CDI_Export"))
+      .select(expected.columns.toSeq.map(col): _*)
+    assert(export.exceptAll(expected).isEmpty && expected.exceptAll(export).isEmpty)
+    assert(export.count() === Tables.documents(spark, sfDir).count())
+
+    // a rerun of the last date finds no newer day and keeps the export
+    run(dates(2))
+    val rerun = readExport(store.getExtras("local", "CDI-corp_days:documents")("S3_Prefix_CDI_Export"))
+    assert(rerun.count() === Tables.documents(spark, sfDir).count())
+    spark.sql("DROP DATABASE IF EXISTS corp_days_staging CASCADE")
+  }
+
   test("exportToHive ignores a managed directory a previous JVM left behind") {
     // this JVM's catalog has never seen the table, but its managed
     // location holds a stale ORC file, as after a publish from another

@@ -33,6 +33,30 @@ class PipelineSpec extends SparkSpec {
     assert(calls === 5)
   }
 
+  test("no resolved data key appears in any plan string") {
+    val resolved = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val keys = new KeyService(k => { resolved.add(k); k })
+    val lines = Envelope.synthesize(spark, dir)
+    val parsed = Envelope.parse(lines).filter(!col("malformed")).drop("malformed", "value")
+    // the key binding sits under Ingest.process's barrier, so its own
+    // frames are checked as well as the pipeline's
+    val frames = Seq("pipeline" -> Ingest.pipeline(lines, keys),
+      "withDataKeys" -> keys.withDataKeys(parsed),
+      "decrypt" -> Ingest.decrypt(keys.withDataKeys(parsed)))
+    val log = JobLog.during(spark) {
+      frames.foreach { case (_, df) => assert(df.count() === Tables.documents(spark, dir).count()) }
+    }
+    assert(resolved.size === 5)
+    val texts = frames.flatMap { case (name, df) =>
+      val qe = df.queryExecution
+      Seq(s"$name queryExecution" -> qe.toString, s"$name executedPlan" -> qe.executedPlan.toString,
+        s"$name explain formatted" -> qe.explainString(org.apache.spark.sql.execution.FormattedMode))
+    } ++ log.plans.map("posted plan" -> _)
+    assert(texts.exists(_._2.contains("data_key_lookup(key_enc")), "the key binding is in no plan")
+    val leaks = for ((what, text) <- texts; k <- resolved.asScala if text.contains(k)) yield what
+    assert(leaks.isEmpty, s"resolved data keys printed in: ${leaks.distinct.mkString(", ")}")
+  }
+
   test("key resolution retries transient failures then succeeds (RetryConfig parity)") {
     var calls = 0
     val flaky = KeyService.withRetry(maxRetries = 3, backoffMs = 1) { k =>

@@ -161,6 +161,35 @@ class PlanLintSpec extends SparkSpec {
       s"stale collect budgets (site count dropped — tighten): ${stale.keys.mkString(", ")}")
   }
 
+  /** Reviewed budget of windows with no partitionBy per product file:
+    * Spark runs such a window's whole input through one task ("No
+    * Partition Defined for Window operation"). The count covers
+    * `Window.orderBy(`, `Window.rowsBetween(`, `OVER (ORDER BY` and
+    * `OVER ()` on code lines, DuckDB oracle SQL included.
+    */
+  private val windowBudget: Map[String, (Int, String)] = Map(
+    "operators/Text.scala" -> (10, "global top-k after a 64-way partitioned pre-rank (≤ 64·k rows), BPE symbol rank and cumulative score quantiles over grouped tables; half are the oracle twins"),
+    "queries/Stats.scala" -> (9, "rank, decile and cumulative windows over per-customer or per-lifetime aggregates, and an OVER () total over chi-square cells"),
+    "queries/Behavior.scala" -> (7, "top-10 path rank over grouped path counts, and OVER () totals over ≤ 10-row digit, weekday and variant aggregates"),
+    "operators/Ann.scala" -> (3, "row numbers of the LIMIT-bounded Lloyd training sample"),
+  )
+
+  test("window lint: every window with no partitionBy is within its file's reviewed budget") {
+    val patterns = Seq("Window.orderBy(", "Window.rowsBetween(", "OVER (ORDER BY", "OVER ()")
+    def isComment(line: String) = Seq("*", "//", "/*").exists(line.trim.startsWith)
+    val found = productSources.map { case (rel, src) =>
+      rel -> src.linesIterator.filterNot(isComment)
+        .map(line => patterns.map(p => scala.util.matching.Regex.quote(p).r.findAllIn(line).size).sum).sum
+    }.filter(_._2 > 0).toMap
+    val over = found.filter { case (f, n) => n > windowBudget.get(f).map(_._1).getOrElse(0) }
+    assert(over.isEmpty,
+      s"unreviewed unpartitioned windows (file -> found, budgeted): " +
+        over.map { case (f, n) => s"$f -> $n, ${windowBudget.get(f).map(_._1).getOrElse(0)}" }.mkString("; "))
+    val stale = windowBudget.filter { case (f, (n, _)) => found.getOrElse(f, 0) < n }
+    assert(stale.isEmpty,
+      s"stale window budgets (site count dropped — tighten): ${stale.keys.mkString(", ")}")
+  }
+
   /** Build-once directories publish only through the filesystem seam
     * (Stage.ensureArtifact / publishDir): a raw `renameTo` bypasses
     * SPARK_GRAFT_FS, and a fixed `".build"` staging name lets two
